@@ -169,6 +169,29 @@ def _drain_stream(q, what: str, timeout: int = 300) -> None:
         raise RuntimeError(f"{what}: stream did not drain within {timeout}s")
 
 
+def _stream_fixture(spark, root: str, frame, op, *args, **kw) -> None:
+    """The streaming gate fixtures' shared staging: ``frame`` lands as the
+    4-file parquet source ``<root>/_src`` (unless the caller staged it
+    there already), ``op`` consumes it one file per micro-batch
+    (availableNow, checkpoint ``<root>/_ckpt``) and the query is drained
+    with :func:`_drain_stream`."""
+    src = os.path.join(root, "_src")
+    if not os.path.isdir(src):
+        frame.repartition(4).write.parquet(src)
+    stream = (
+        spark.readStream.format("parquet")
+        .schema(frame.schema)
+        .option("maxFilesPerTrigger", "1")
+        .load(src)
+    )
+    q = op(
+        stream, root, *args,
+        checkpoint_dir=os.path.join(root, "_ckpt"),
+        trigger={"availableNow": True}, **kw,
+    )
+    _drain_stream(q, f"{op.__name__} fixture")
+
+
 def _drain_stream_by_progress(q, expected_rows: int, what: str, timeout: int = 300) -> None:
     """Drain a stream whose StreamExecution never self-terminates:
     ``applyInPandasWithState`` with ``ProcessingTimeTimeout`` keeps the
@@ -2414,22 +2437,7 @@ def stream_text_index(spark, sf_dir):
         from kartothek_spark.streaming.update import stream_text_index as op
 
         docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-        src = os.path.join(root, "_src")
-        docs.repartition(4).write.parquet(src)
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(docs.schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(src)
-        )
-        q = op(
-            stream, root, "stidx", buckets=8,
-            checkpoint_dir=os.path.join(root, "_ckpt"),
-            trigger={"availableNow": True},
-        )
-        # a silent timeout would publish a PARTIAL index into the fixture
-        # cache (poisoned until the code tag changes) — fail the build
-        _drain_stream(q, "stream_text_index fixture")
+        _stream_fixture(spark, root, docs, op, "stidx", buckets=8)
 
     root = _fixture(sf_dir, "stidx", build)
     return search_text_index(spark, root, "stidx", _SEARCH_TERMS, k=25)
@@ -2451,20 +2459,9 @@ def stream_fuzzy_index(spark, sf_dir):
     def build(root):
         from kartothek_spark.streaming.update import stream_fuzzy_index as op
 
-        src = os.path.join(root, "_src")
-        docs.repartition(4).write.parquet(src)
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(docs.schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(src)
+        _stream_fixture(
+            spark, root, docs, op, "sfidx", string_col="key", max_dist=2, buckets=8
         )
-        q = op(
-            stream, root, "sfidx", string_col="key", max_dist=2, buckets=8,
-            checkpoint_dir=os.path.join(root, "_ckpt"),
-            trigger={"availableNow": True},
-        )
-        _drain_stream(q, "stream_fuzzy_index fixture")
 
     root = _fixture(sf_dir, "sfidx", build)
     return search_fuzzy_index(
@@ -2887,20 +2884,7 @@ def stream_contamination_index(spark, sf_dir):
             stream_contamination_index as op,
         )
 
-        src = os.path.join(root, "_src")
-        bench.repartition(4).write.parquet(src)
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(bench.schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(src)
-        )
-        q = op(
-            stream, root, "sbx", id_col="bench_id",
-            checkpoint_dir=os.path.join(root, "_ckpt"),
-            trigger={"availableNow": True},
-        )
-        _drain_stream(q, "stream_contamination_index fixture")
+        _stream_fixture(spark, root, bench, op, "sbx", id_col="bench_id")
         # post-stream compaction — the real pipeline step before serving:
         # per-batch commits leave one small file set per micro-batch, and
         # probe latency is file-count-bound on the index side
@@ -3036,20 +3020,7 @@ def stream_bloom_index(spark, sf_dir):
     def build(root):
         from kartothek_spark.streaming.update import stream_bloom_index as op
 
-        src = os.path.join(root, "_src")
-        bench.repartition(4).write.parquet(src)
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(bench.schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(src)
-        )
-        q = op(
-            stream, root, "sblx", n=8, m_bits=_BLOOM_M,
-            checkpoint_dir=os.path.join(root, "_ckpt"),
-            trigger={"availableNow": True},
-        )
-        _drain_stream(q, "stream_bloom_index fixture")
+        _stream_fixture(spark, root, bench, op, "sblx", n=8, m_bits=_BLOOM_M)
         from kartothek_spark.dataset.write import compact_dataset
 
         compact_dataset(spark, root, "sblx__keys", sort_partitions_by=["kh"])
@@ -3200,19 +3171,10 @@ def stream_clean_corpus(spark, sf_dir):
             path = os.path.join(src, f"slice_{i}.parquet")
             pdf.to_parquet(path)
             os.utime(path, (1_000_000_000 + i, 1_000_000_000 + i))
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(ingest.schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(src)
-        )
-        q = op(
-            stream, root, "cc", bloom_root=bloom_root, bloom_uuid="blx",
+        _stream_fixture(
+            spark, root, ingest, op, "cc", bloom_root=bloom_root, bloom_uuid="blx",
             gopher=_CLEAN_GOPHER, fp_m_bits=1 << 18,
-            checkpoint_dir=os.path.join(root, "_ckpt"),
-            trigger={"availableNow": True},
         )
-        _drain_stream(q, "stream_clean_corpus fixture")
 
     root = _fixture(sf_dir, "ccidx", build)
     return read_table(spark, root, "cc").select("doc_id", "lang", "n_chars")
@@ -3294,20 +3256,7 @@ def stream_cms(spark, sf_dir):
     def build(root):
         from kartothek_spark.streaming.update import stream_cms_sketch as op
 
-        src = os.path.join(root, "_src")
-        docs.repartition(4).write.parquet(src)
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(docs.schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(src)
-        )
-        q = op(
-            stream, root, "cms",
-            checkpoint_dir=os.path.join(root, "_ckpt"),
-            trigger={"availableNow": True},
-        )
-        _drain_stream(q, "stream_cms fixture")
+        _stream_fixture(spark, root, docs, op, "cms")
 
     root = _fixture(sf_dir, "cmsidx", build)
     return read_table(spark, root, "cms")
@@ -3348,20 +3297,7 @@ def stream_hll(spark, sf_dir):
     def build(root):
         from kartothek_spark.streaming.update import stream_hll_registers as op
 
-        src = os.path.join(root, "_src")
-        docs.repartition(4).write.parquet(src)
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(docs.schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(src)
-        )
-        q = op(
-            stream, root, "hll", group_cols=("source",),
-            checkpoint_dir=os.path.join(root, "_ckpt"),
-            trigger={"availableNow": True},
-        )
-        _drain_stream(q, "stream_hll fixture")
+        _stream_fixture(spark, root, docs, op, "hll", group_cols=("source",))
 
     root = _fixture(sf_dir, "hllidx", build)
     return read_table(spark, root, "hll")
@@ -3443,20 +3379,7 @@ def stream_dsir_scores(spark, sf_dir):
     def build(root):
         from kartothek_spark.streaming.update import stream_dsir_scores as op
 
-        src = os.path.join(root, "_src")
-        raw.repartition(4).write.parquet(src)
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(raw.schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(src)
-        )
-        q = op(
-            stream, root, "dsc", model_root, "dm",
-            checkpoint_dir=os.path.join(root, "_ckpt"),
-            trigger={"availableNow": True},
-        )
-        _drain_stream(q, "stream_dsir_scores fixture")
+        _stream_fixture(spark, root, raw, op, "dsc", model_root, "dm")
 
     root = _fixture(sf_dir, "dsir_scores_stream", build)
     return read_table(spark, root, "dsc")
@@ -3555,20 +3478,7 @@ def stream_span_index(spark, sf_dir):
     def build(root):
         from kartothek_spark.streaming.update import stream_span_index as op
 
-        src = os.path.join(root, "_src")
-        docs.repartition(4).write.parquet(src)
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(docs.schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(src)
-        )
-        q = op(
-            stream, root, "sspx", n=3, buckets=16,
-            checkpoint_dir=os.path.join(root, "_ckpt"),
-            trigger={"availableNow": True},
-        )
-        _drain_stream(q, "stream_span_index fixture")
+        _stream_fixture(spark, root, docs, op, "sspx", n=3, buckets=16)
 
     root = _fixture(sf_dir, "sspx_idx", build)
     return c4_dedup_incremental(spark, _c4_probe_batch(spark, sf_dir), root, "sspx")
@@ -4040,20 +3950,7 @@ def stream_winnow_index(spark, sf_dir):
     def build(root):
         from kartothek_spark.streaming.update import stream_winnow_index as op
 
-        src = os.path.join(root, "_src")
-        corpus.repartition(4).write.parquet(src)
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(corpus.schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(src)
-        )
-        q = op(
-            stream, root, "swx", k=8, w=4, buckets=16,
-            checkpoint_dir=os.path.join(root, "_ckpt"),
-            trigger={"availableNow": True},
-        )
-        _drain_stream(q, "stream_winnow_index fixture")
+        _stream_fixture(spark, root, corpus, op, "swx", k=8, w=4, buckets=16)
 
     root = _fixture(sf_dir, "swxidx", build)
     return winnow_dup_pairs_indexed(spark, root, "swx", min_shared=12)
@@ -4269,20 +4166,7 @@ def _cluster_assign_fixture(spark, sf_dir):
 
         emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
         save_kmeans_model(spark, _seed_centroids(spark, sf_dir), root)
-        src = os.path.join(root, "_src")
-        emb.repartition(4).write.parquet(src)
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(emb.schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(src)
-        )
-        q = op(
-            stream, root, "cl_assign",
-            checkpoint_dir=os.path.join(root, "_ckpt"),
-            trigger={"availableNow": True},
-        )
-        _drain_stream(q, "stream_cluster_assign fixture")
+        _stream_fixture(spark, root, emb, op, "cl_assign")
 
     return _fixture(sf_dir, "cl_assign", build)
 
@@ -4326,20 +4210,7 @@ def stream_kmeans_model(spark, sf_dir):
         from kartothek_spark.streaming.update import stream_kmeans_update as op
 
         emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        src = os.path.join(root, "_src")
-        emb.repartition(4).write.parquet(src)
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(emb.schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(src)
-        )
-        q = op(
-            stream, root, k=8,
-            checkpoint_dir=os.path.join(root, "_ckpt"),
-            trigger={"availableNow": True},
-        )
-        _drain_stream(q, "stream_kmeans_model fixture")
+        _stream_fixture(spark, root, emb, op, k=8)
 
     root = _fixture(sf_dir, "skm", build)
     model = load_kmeans_model(spark, root)
@@ -4433,20 +4304,7 @@ def stream_sq_index(spark, sf_dir):
     def build(root):
         from kartothek_spark.streaming.update import stream_sq_index as op
 
-        src = os.path.join(root, "_src")
-        emb.repartition(4).write.parquet(src)
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(emb.schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(src)
-        )
-        q = op(
-            stream, root, "ssq", dim=EMB_DIM,
-            checkpoint_dir=os.path.join(root, "_ckpt"),
-            trigger={"availableNow": True},
-        )
-        _drain_stream(q, "stream_sq_index fixture")
+        _stream_fixture(spark, root, emb, op, "ssq", dim=EMB_DIM)
 
     root = _fixture(sf_dir, "ssq_idx", build)
     return search_sq_index(spark, root, "ssq", emb.where(F.col("vec_id") < 10), k=5)

@@ -92,7 +92,13 @@ def clean_corpus(
     and the min-id-per-fingerprint winners are decided on (id, fp)
     rows; and the payload joins in by id exactly once, with no text
     kernel above the final scan. Value-identical to the nested form
-    (same stage twins oracle it)."""
+    (same stage twins oracle it).
+
+    Precondition: ``id_col`` is unique. The verdicts are decided on ids
+    and the payload joins back by id, so with a repeated id a row that
+    failed the filter or lost its fingerprint group leaks into the output
+    beside a surviving row of that id, and a contaminated row removes
+    every row of its id."""
     slim = df.select(id_col, text_col)
     sig = gopher_filter(slim, text_col, **(gopher or {})).select(
         F.col(id_col), fingerprint(text_col).alias("__fp")

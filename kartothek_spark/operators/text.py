@@ -9,6 +9,8 @@ shuffle, no UDF, scales linearly with input splits.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -514,6 +516,12 @@ def gopher_rules(
     }
 
 
+def _all_rules_pass(rules: dict[str, Column]) -> Column:
+    """The conjunction of a rule battery such as :func:`gopher_rules`:
+    true where every flag holds."""
+    return reduce(lambda a, b: a & b, rules.values())
+
+
 def gopher_flags(
     df: "DataFrame", text_col: str = "text", id_col: str = "doc_id", **thresholds
 ) -> "DataFrame":
@@ -521,13 +529,10 @@ def gopher_flags(
     (which rule kills which doc); :func:`gopher_filter` is the apply
     form. Zero shuffle: every flag is a per-row expression."""
     rules = gopher_rules(text_col, **thresholds)
-    passed = None
-    for flag in rules.values():
-        passed = flag if passed is None else (passed & flag)
     return df.select(
         F.col(id_col),
         *[flag.alias(name) for name, flag in rules.items()],
-        passed.alias("gopher_pass"),
+        _all_rules_pass(rules).alias("gopher_pass"),
     )
 
 
@@ -543,12 +548,7 @@ def gopher_filter(
     the input already has enough splits and this is a no-op."""
     from kartothek_spark.operators._util import scale_out
 
-    df = scale_out(df)
-    rules = gopher_rules(text_col, **thresholds)
-    cond = None
-    for flag in rules.values():
-        cond = flag if cond is None else (cond & flag)
-    return df.where(cond)
+    return scale_out(df).where(_all_rules_pass(gopher_rules(text_col, **thresholds)))
 
 
 def _gopher_rules_sql(

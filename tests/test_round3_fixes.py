@@ -11,46 +11,115 @@ from pyspark.sql import functions as F
 from kartothek_spark.core.manifest import DatasetManifest
 from kartothek_spark.dataset.read import read_table
 from kartothek_spark.dataset.write import store_dataframe_as_dataset, update_dataset
+from tests.conftest import SF_DIR
 
 
-def test_stream_retry_of_committed_batch_is_noop(spark, tmp_path):
+def _sorted_rows(spark, root, *uuids):
+    return [sorted(str(r) for r in read_table(spark, root, u).collect()) for u in uuids]
+
+
+def _replay_cases():
+    from kartothek_spark.operators.contamination_index import _bands_uuid
+    from kartothek_spark.operators.search_index import search_text_index
+
+    def search(spark, root):
+        return search_text_index(spark, root, "ev", ["scan", "merge", "window"], k=20).collect()
+
+    return [
+        pytest.param("stream_update_dataset", {"keep_history": True},
+                     lambda spark, root: _sorted_rows(spark, root, "ev"),
+                     id="stream_update_dataset"),
+        pytest.param("stream_text_index", {"buckets": 4}, search, id="stream_text_index"),
+        # two-dataset commit: the bands dataset is the ``also_owned`` one
+        pytest.param("stream_contamination_index", {},
+                     lambda spark, root: _sorted_rows(spark, root, "ev", _bands_uuid("ev")),
+                     id="stream_contamination_index"),
+        # overwrite-style fold: a replay would double every cell
+        pytest.param("stream_cms_sketch", {},
+                     lambda spark, root: _sorted_rows(spark, root, "ev"),
+                     id="stream_cms_sketch"),
+    ]
+
+
+@pytest.mark.parametrize("op_name, kwargs, answer", _replay_cases())
+def test_stream_retry_of_committed_batch_is_noop(spark, tmp_path, monkeypatch, op_name,
+                                                 kwargs, answer):
     """foreachBatch is at-least-once: simulate a crash between the dataset
     commit and the checkpoint advance by deleting the checkpoint's commit
     marker for the last batch and restarting — the re-delivered batch must
-    NOT re-append its rows (last_stream_batch manifest stamp)."""
-    from kartothek_spark.streaming.update import stream_update_dataset
+    NOT land again (last_stream_batch manifest stamp): same live version,
+    same answer, and no build, sync or store runs (no commit, no file)."""
+    from kartothek_spark.streaming import update
 
     src = str(tmp_path / "src")
     root = str(tmp_path / "store")
     ckpt = str(tmp_path / "ckpt")
-    batch = spark.range(90).selectExpr("id", "id % 4 AS k")
+    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet")).where(
+        F.col("doc_id") < 90
+    ).select("doc_id", "text")
     for i in range(3):
-        batch.where(F.col("id") % 3 == i).coalesce(1).write.mode("append").parquet(src)
+        docs.where(F.col("doc_id") % 3 == i).coalesce(1).write.mode("append").parquet(src)
 
     def run():
         stream = (
-            spark.readStream.schema("id long, k long")
+            spark.readStream.schema("doc_id long, text string")
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        q = stream_update_dataset(
+        q = getattr(update, op_name)(
             stream, root, "ev", checkpoint_dir=ckpt,
-            trigger={"availableNow": True}, keep_history=True,
+            trigger={"availableNow": True}, **kwargs,
         )
-        q.awaitTermination(120)
+        q.awaitTermination(300)
+        assert q.exception() is None
+
+    def files():
+        return sorted(os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs)
 
     run()
-    assert read_table(spark, root, "ev").count() == 90
+    want = answer(spark, root)
+    assert want and all(want)  # no empty dataset or search result
     v_before = DatasetManifest.load(root, "ev").version
+    files_before = files()
 
     # crash window: checkpoint says batch 2 never finished → re-delivered
     os.remove(os.path.join(ckpt, "commits", "2"))
     crc = os.path.join(ckpt, "commits", ".2.crc")
     if os.path.exists(crc):
         os.remove(crc)
+    commits = []
+    real_commit = DatasetManifest.commit
+    monkeypatch.setattr(
+        DatasetManifest, "commit",
+        lambda self, *a, **kw: commits.append(self.dataset_uuid) or real_commit(self, *a, **kw),
+    )
     run()
-    assert read_table(spark, root, "ev").count() == 90  # no duplicate rows
+    monkeypatch.undo()
+    assert commits == [] and files() == files_before  # nothing built, synced or stored
     assert DatasetManifest.load(root, "ev").version == v_before  # no extra commit
+    assert answer(spark, root) == want  # no duplicate rows, postings or counts
+
+
+def test_stream_update_purges_uncommitted_batch0_payload(spark, tmp_path):
+    """A first commit that crashed before its manifest leaves payload under
+    ``<uuid>/table/``; the stream must purge that debris rather than adopt
+    it into the batch-0 build (which would commit every row twice)."""
+    from kartothek_spark.streaming.update import stream_update_dataset
+
+    src = str(tmp_path / "src")
+    root = str(tmp_path / "store")
+    batch = spark.range(30).selectExpr("id", "id % 4 AS k").coalesce(1)
+    batch.write.parquet(src)
+    batch.write.parquet(os.path.join(root, "ev", "table"))  # debris: no manifest
+    assert not DatasetManifest.exists(root, "ev")
+
+    q = stream_update_dataset(
+        spark.readStream.schema("id long, k long").parquet(src), root, "ev",
+        checkpoint_dir=str(tmp_path / "ckpt"), trigger={"availableNow": True},
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert read_table(spark, root, "ev").count() == 30
 
 
 def test_batch_already_committed_guard(tmp_path, spark):
