@@ -20,6 +20,9 @@ hive-style ``K=V`` path segments keeps working):
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
+import hashlib
 import json
 import os
 import tempfile
@@ -45,11 +48,12 @@ METADATA_SUFFIX_ZST = METADATA_SUFFIX + ".zst"
 # Partition-list sidecar (Delta checkpoint analog): at ~1M partitions even
 # the zstd JSON manifest spends its load time parsing the partition map.
 # At or above this count commit() shards the partition list into a
-# columnar parquet sidecar (<uuid>/_manifest/_partitions_v<N>.parquet,
+# columnar parquet sidecar (<uuid>/_manifest/_partitions_v<N>_<token>.parquet,
 # underscore-named so GC's bookkeeping rule skips it) and the manifest
 # JSON keeps a pointer + count. Load reads it back with pyarrow —
-# columnar decode instead of 1M-entry JSON parse. One sidecar per
-# version; history snapshots of the same version share it.
+# columnar decode instead of 1M-entry JSON parse. Every commit attempt
+# writes its own sidecar (the token makes the name write-once); history
+# snapshots of the same version share the winner's.
 SIDECAR_THRESHOLD = 100_000
 SIDECAR_DIR = "_manifest"
 
@@ -58,24 +62,23 @@ class CommitConflict(RuntimeError):
     """Another writer committed since this manifest state was loaded.
 
     Optimistic concurrency control, beyond the reference (which documents
-    plain last-writer-wins): commit() verifies the on-disk version is
-    still the one this state derived from before swapping. On a local
-    filesystem this is a read-check-swap (a narrow race window remains);
-    on an object store the same check is a conditional put / put-if-match
-    and is exact. Mutation APIs catch this and rebase
-    (:func:`kartothek_spark.dataset.write.update_dataset`)."""
+    plain last-writer-wins): commit() swaps the live manifest only if it
+    is still the object this state was loaded from — a compare-and-swap
+    on the object's ETag, exact on every store (the local filesystem
+    included, see :class:`ConditionalPutStore`). Mutation APIs catch this
+    and rebase (:func:`kartothek_spark.dataset.write.update_dataset`)."""
 
 
 class ConditionalPutStore:
-    """SPEC.md §7's object-store atomicity stance as a code seam.
+    """SPEC.md §7's atomicity stance as a code seam.
 
-    A store adapter implementing these three methods can be attached to a
-    loaded manifest (:meth:`DatasetManifest.attach_conditional_store`);
-    :meth:`DatasetManifest.commit` then swaps the LIVE manifest object
-    through ``put_if_match`` — S3 ``If-Match`` on the ETag observed at
-    load, or ``If-None-Match: *`` (``expected_etag=None``) for creation —
-    making the optimistic-concurrency check exact instead of
-    read-check-swap. Duck-typed protocol (subclassing optional):
+    :meth:`DatasetManifest.commit` swaps the LIVE manifest object through
+    ``put_if_match`` — S3 ``If-Match`` on the ETag observed at load, or
+    ``If-None-Match: *`` (``expected_etag=None``) for creation. The local
+    filesystem is the default implementation; an object-store adapter is
+    attached per loaded manifest
+    (:meth:`DatasetManifest.attach_conditional_store`). Duck-typed
+    protocol (subclassing optional):
 
     - ``etag(path) -> str | None``: current ETag, None if absent.
     - ``put_if_match(path, data, expected_etag) -> str | None``:
@@ -90,12 +93,12 @@ class ConditionalPutStore:
       (``check_conflict=False`` deliberate-overwrite semantics); same
       return convention.
 
-    Scope: this seam covers ONLY conflict detection on the live manifest
-    object. History snapshots and partition sidecars are written to
-    version-unique names BEFORE the swap (write-once keys, no contention
-    — SPEC.md §7's ordering), and their bytes — like the parquet data
-    files themselves — travel over the shared filesystem/data plane, not
-    through this store adapter."""
+    Scope: only the live manifest object is conditional. Everything a
+    commit writes BEFORE the swap — the partition sidecar — carries a
+    per-attempt name no other writer can take, and the history snapshot
+    is written by the swap's winner AFTER it (SPEC.md §6). Those files,
+    like the parquet data files themselves, travel over the shared
+    filesystem/data plane, not through this store adapter."""
 
     def etag(self, path: str) -> str | None:  # pragma: no cover - protocol
         raise NotImplementedError
@@ -109,6 +112,54 @@ class ConditionalPutStore:
         self, path: str, data: bytes
     ) -> str | None:  # pragma: no cover - protocol
         raise NotImplementedError
+
+
+def _etag(data: bytes) -> str:
+    return hashlib.sha1(data).hexdigest()
+
+
+@contextlib.contextmanager
+def _dir_lock(path: str):
+    """Exclusive ``flock`` on directory ``path``; the kernel releases it
+    when the holder dies, so no stale lock can outlive a crash."""
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX)
+        yield
+    finally:
+        os.close(fd)
+
+
+class _FileStore(ConditionalPutStore):
+    """The local filesystem as a :class:`ConditionalPutStore` — the
+    default store of :meth:`DatasetManifest.commit`. ETag = sha1 of the
+    object's bytes (the S3 contract for single-part objects); the compare
+    and the rename happen under one lock on the manifest's directory."""
+
+    def etag(self, path: str) -> str | None:
+        try:
+            with open(path, "rb") as fh:
+                return _etag(fh.read())
+        except FileNotFoundError:
+            return None
+
+    def put_if_match(self, path: str, data: bytes, expected_etag: str | None) -> str:
+        with _dir_lock(os.path.dirname(path)):
+            if self.etag(path) != expected_etag:
+                what = ("was created concurrently" if expected_etag is None else
+                        "changed since it was loaded — a concurrent writer committed")
+                name = os.path.basename(path)
+                raise CommitConflict(f"manifest {name!r} {what}; reload and rebase")
+            _atomic_write(path, data)
+        return _etag(data)
+
+    def put(self, path: str, data: bytes) -> str:
+        with _dir_lock(os.path.dirname(path)):
+            _atomic_write(path, data)
+        return _etag(data)
+
+
+_FILE_STORE = _FileStore()
 
 
 _SAFE_SEGMENT = None  # compiled lazily (regex import cost at module load)
@@ -405,10 +456,9 @@ class DatasetManifest:
     # True once this in-memory state corresponds to a committed manifest —
     # the next commit() then advances the version (never serialized)
     _persisted: bool = field(default=False, repr=False, compare=False)
-    # SPEC.md §7 seam: when attached (attach_conditional_store), the live
-    # manifest swap goes through the store's put-if-match instead of the
-    # local read-check-swap — the S3 `If-Match` stance, exact by
-    # construction (never serialized)
+    # SPEC.md §7 seam: the object-store adapter the live manifest swap goes
+    # through (attach_conditional_store); None = the local filesystem
+    # store (never serialized)
     _cond_store: Any = field(default=None, repr=False, compare=False)
     # the store ETag this state was loaded against (the If-Match value)
     _loaded_etag: str | None = field(default=None, repr=False, compare=False)
@@ -685,36 +735,34 @@ class DatasetManifest:
         )
 
     @classmethod
-    def _load_raw_dict(cls, root: str, dataset_uuid: str) -> tuple[dict[str, Any], str]:
-        """The manifest dict as stored, plus its codec — no sidecar
-        resolution (that happens in ``from_dict``)."""
-        path = os.path.join(root, dataset_uuid + METADATA_SUFFIX)
-        if os.path.exists(path):
-            with open(path) as fh:
-                return json.load(fh), "json"
-        zpath = os.path.join(root, dataset_uuid + METADATA_SUFFIX_ZST)
-        import pyarrow as pa
-
-        with open(zpath, "rb") as fh:
-            blob = fh.read()
-        # 8-byte LE plaintext-size header (pyarrow's one-shot decompress
-        # needs the exact output size)
-        size = int.from_bytes(blob[:8], "little")
-        raw = pa.Codec("zstd").decompress(blob[8:], asbytes=True, decompressed_size=size)
-        return json.loads(raw), "zstd"
-
-    @classmethod
-    def _peek_version(cls, root: str, dataset_uuid: str) -> int:
-        return int(cls._load_raw_dict(root, dataset_uuid)[0].get("version", 1))
+    def _load_raw_dict(cls, root: str, dataset_uuid: str) -> tuple[dict, str, str]:
+        """The live manifest dict as stored, its codec and its ETag — no
+        sidecar resolution (that happens in ``from_dict``)."""
+        got = _read_manifest(os.path.join(root, dataset_uuid + METADATA_SUFFIX))
+        if got is None:
+            raise FileNotFoundError(f"dataset {dataset_uuid!r} has no manifest in {root!r}")
+        return got
 
     @classmethod
     def load(cls, root: str, dataset_uuid: str, version: int | None = None) -> "DatasetManifest":
         if version is not None:
             return cls._load_snapshot(root, dataset_uuid, version)
-        d, codec = cls._load_raw_dict(root, dataset_uuid)
-        m = cls.from_dict(d, root)
+        d, codec, etag = cls._load_raw_dict(root, dataset_uuid)
+        while True:
+            try:
+                m = cls.from_dict(d, root)
+                break
+            except FileNotFoundError:
+                # the sidecar this manifest points at is gone: a later
+                # commit superseded and cleaned it up. Read the live
+                # manifest again — unless it has not moved, in which case
+                # the dataset really is damaged
+                seen, (d, codec, etag) = etag, cls._load_raw_dict(root, dataset_uuid)
+                if etag == seen:
+                    raise
         m.storage_format = codec
         m._persisted = True
+        m._loaded_etag = etag
         return m
 
     @classmethod
@@ -722,23 +770,10 @@ class DatasetManifest:
         """Time-travel load: the immutable snapshot committed as ``version``.
         The LIVE manifest at the same version number is the same state, so
         asking for the current version works even before any history file
-        exists at it (commit writes the snapshot before the live swap)."""
+        exists at it (commit writes the snapshot after the live swap)."""
         hist = os.path.join(root, dataset_uuid, "_history")
-        stem = os.path.join(hist, f"_v{version:08d}.manifest")
-        if os.path.exists(stem + ".json"):
-            with open(stem + ".json") as fh:
-                m = cls.from_dict(json.load(fh), root)
-                m.storage_format = "json"
-        elif os.path.exists(stem + ".json.zst"):
-            import pyarrow as pa
-
-            with open(stem + ".json.zst", "rb") as fh:
-                blob = fh.read()
-            size = int.from_bytes(blob[:8], "little")
-            raw = pa.Codec("zstd").decompress(blob[8:], asbytes=True, decompressed_size=size)
-            m = cls.from_dict(json.loads(raw), root)
-            m.storage_format = "zstd"
-        else:
+        got = _read_manifest(os.path.join(hist, f"_v{version:08d}.manifest.json"))
+        if got is None:
             live = cls.load(root, dataset_uuid)
             if live.version == version:
                 return live
@@ -747,7 +782,12 @@ class DatasetManifest:
                 f"(live version is v{live.version}; was it written with "
                 "keep_history=True, or has the snapshot been expired?)"
             )
+        d, codec, etag = got
+        m = cls.from_dict(d, root)
+        m.storage_format = codec
         m._persisted = True
+        # a snapshot holds the live manifest's exact bytes of its version
+        m._loaded_etag = etag
         return m
 
     @classmethod
@@ -793,37 +833,23 @@ class DatasetManifest:
         ) or os.path.exists(os.path.join(root, dataset_uuid + METADATA_SUFFIX_ZST))
 
     def commit(self, check_conflict: bool = True) -> None:
-        """Atomic commit: write-temp + rename (POSIX atomic replace), with
-        optimistic concurrency (beyond the reference's documented
-        last-writer-wins): the commit is rejected with
-        :class:`CommitConflict` when the on-disk manifest is no longer the
-        state this one was loaded from — a concurrent writer got there
-        first. Callers rebase by reloading and re-applying (see
-        ``update_dataset(max_conflict_retries=...)``); pass
-        ``check_conflict=False`` for deliberate overwrite semantics. On an
-        object store the check maps to a conditional put (put-if-match on
-        the manifest object), making it exact rather than read-check-swap —
-        attach a :class:`ConditionalPutStore` to take that path.
-        """
-        if check_conflict and self._cond_store is None:
-            disk_exists = type(self).exists(self.root, self.dataset_uuid)
-            if not self._persisted:
-                if disk_exists:
-                    raise CommitConflict(
-                        f"dataset {self.dataset_uuid!r} was created concurrently"
-                    )
-            elif disk_exists:
-                # version-only peek: skips the partition map (and any
-                # sidecar read) — the conditional-put analog needs only
-                # the version tag, and at 1M partitions a full load here
-                # would double the commit cost
-                disk_version = type(self)._peek_version(self.root, self.dataset_uuid)
-                if disk_version != self.version:
-                    raise CommitConflict(
-                        f"dataset {self.dataset_uuid!r}: expected on-disk "
-                        f"version v{self.version}, found v{disk_version} — "
-                        "a concurrent writer committed; reload and rebase"
-                    )
+        """Atomic commit with optimistic concurrency (beyond the
+        reference's last-writer-wins): the live manifest is swapped through
+        ``put_if_match`` on the ETag this state was loaded from (must not
+        exist for a new dataset) — of the local filesystem store, or of an
+        attached :class:`ConditionalPutStore`. If a concurrent writer got
+        there first, :class:`CommitConflict` is raised and the version bump
+        rolled back; callers reload and re-apply (see
+        ``update_dataset(max_conflict_retries=...)``).
+        ``check_conflict=False`` is a deliberate unconditional overwrite.
+
+        The partition sidecar written before the swap has a per-attempt
+        name, so a losing or crashed writer leaves only an orphan; the
+        history snapshot is written from the committed bytes after the
+        swap. On a sidecar dataset commit() may rebind ``self.partitions``
+        to the lazy map a reload would produce, so a reference to the map
+        taken before the commit no longer tracks this manifest."""
+        store = self._cond_store or _FILE_STORE
         if self._persisted:
             self.version += 1
         import datetime as _dt
@@ -831,14 +857,12 @@ class DatasetManifest:
         self.committed_at = _dt.datetime.now(_dt.timezone.utc).isoformat()
         os.makedirs(self.root, exist_ok=True)
         # partition-list sidecar (Delta checkpoint analog): written BEFORE
-        # the snapshot/live manifests that point at it; a crash in between
-        # leaves an underscore-named orphan the next commit of this
-        # version atomically replaces
+        # the live manifest that points at it, under a name unique to this
+        # attempt; a crash or a lost race leaves an underscore-named orphan
         if self.partitions_sidecar or len(self.partitions) >= SIDECAR_THRESHOLD:
             self.partitions_sidecar = True
-            self._sidecar_ref = os.path.join(
-                self.dataset_uuid, SIDECAR_DIR, f"_partitions_v{self.version:08d}.parquet"
-            )
+            name = f"_partitions_v{self.version:08d}_{os.urandom(4).hex()}.parquet"
+            self._sidecar_ref = os.path.join(self.dataset_uuid, SIDECAR_DIR, name)
             adopted = _write_partitions_sidecar(
                 os.path.join(self.root, self._sidecar_ref), self.partitions
             )
@@ -851,69 +875,34 @@ class DatasetManifest:
                 self.partitions = adopted
         else:
             self._sidecar_ref = None
-        if self.keep_history:
-            # snapshot BEFORE the live swap: once readers can see version N
-            # they can also time-travel to it; a crash in between leaves an
-            # orphan snapshot that the next commit overwrites harmlessly
-            os.makedirs(self.history_root, exist_ok=True)
-            self._write_blob(self.history_path(self.version))
-        if self._cond_store is not None:
-            # exact swap: If-Match on the load-time ETag (If-None-Match:*
-            # for creation); the store raises CommitConflict on staleness
-            data = self._serialize()
+        data = self._serialize()
+        try:
             if check_conflict:
                 expected = self._loaded_etag if self._persisted else None
-                try:
-                    new_etag = self._cond_store.put_if_match(
-                        self.manifest_path, data, expected
-                    )
-                except CommitConflict:
-                    # roll the version bump back — this state was NOT
-                    # committed; the caller reloads and rebases
-                    if self._persisted:
-                        self.version -= 1
-                    raise
+                new_etag = store.put_if_match(self.manifest_path, data, expected)
             else:
-                new_etag = self._cond_store.put(self.manifest_path, data)
-            # the PUT's own ETag is the next If-Match baseline; a
-            # follow-up etag() read could observe a competitor that
-            # landed after our put and silently adopt it as baseline
-            self._loaded_etag = (
-                new_etag
-                if new_etag is not None
-                else self._cond_store.etag(self.manifest_path)
-            )
-        else:
-            fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".tmp")
-            try:
-                self._write_fd(fd)
-                os.replace(tmp, self.manifest_path)
-            except BaseException:
-                if os.path.exists(tmp):
-                    os.unlink(tmp)
-                raise
-        self._persisted = True
-        if self._sidecar_ref and not self.keep_history:
-            # no time travel -> superseded sidecars are unreferenced now;
-            # with keep_history, expire_snapshots owns their lifetime
-            sdir = os.path.join(self.root, self.dataset_uuid, SIDECAR_DIR)
-            keep = os.path.basename(self._sidecar_ref)
-            for name in os.listdir(sdir):
-                if name.startswith("_partitions_v") and name != keep:
-                    try:
-                        os.unlink(os.path.join(sdir, name))
-                    except OSError:
-                        pass
-
-    def _write_blob(self, path: str) -> None:
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".tmp")
-        try:
-            self._write_fd(fd)
-            os.replace(tmp, path)
-        except BaseException:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
+                new_etag = store.put(self.manifest_path, data)
+        except CommitConflict:
+            # this state was NOT committed; the caller reloads and rebases
+            if self._persisted:
+                self.version -= 1
             raise
+        # the PUT's own ETag is the next If-Match baseline; a follow-up
+        # etag() read could observe a competitor that landed after our
+        # put and silently adopt it as baseline
+        self._loaded_etag = new_etag or store.etag(self.manifest_path)
+        self._persisted = True
+        if self.keep_history:
+            # until this lands, load(version=N) serves the live manifest
+            _atomic_write(self.history_path(self.version), data)
+        elif self._sidecar_ref:
+            # no time travel -> sidecars of older versions are unreferenced
+            # now (a newer attempt's may still be in flight: keep those);
+            # with keep_history, expire_snapshots owns their lifetime
+            for v, path in _sidecars(self.root, self.dataset_uuid):
+                if v < self.version:
+                    with contextlib.suppress(OSError):
+                        os.unlink(path)
 
     def attach_conditional_store(self, store: "ConditionalPutStore") -> None:
         """Route this manifest's live swaps through ``store``'s
@@ -921,9 +910,7 @@ class DatasetManifest:
         If-Match baseline — attach immediately after load, before any
         concurrent writer can move the object."""
         self._cond_store = store
-        self._loaded_etag = (
-            store.etag(self.manifest_path) if self._persisted else None
-        )
+        self._loaded_etag = store.etag(self.manifest_path) if self._persisted else None
 
     def _serialize(self) -> bytes:
         """The manifest's exact on-disk byte representation (SPEC.md §3):
@@ -939,9 +926,60 @@ class DatasetManifest:
             )
         return json.dumps(self.to_dict(), default=str).encode("utf-8")
 
-    def _write_fd(self, fd: int) -> None:
-        with os.fdopen(fd, "wb") as fh:
-            fh.write(self._serialize())
+
+def _atomic_write(path: str, fill) -> None:
+    """Make ``path`` appear complete or not at all: ``fill`` — bytes, or
+    a callable that writes a file at the path it is given — goes to a temp
+    file in the same directory, which is then renamed over ``path``."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".tmp")
+    os.close(fd)
+    try:
+        if callable(fill):
+            fill(tmp)
+        else:
+            with open(tmp, "wb") as fh:
+                fh.write(fill)
+        os.replace(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+        raise
+
+
+def _read_manifest(path: str) -> tuple[dict[str, Any], str, str] | None:
+    """The manifest document at ``path`` (plain JSON) or at its zstd twin
+    ``path + ".zst"`` — the plain one wins when both exist: (dict, codec,
+    ETag of the stored bytes), or None when neither exists."""
+    for codec, p in (("json", path), ("zstd", path + ".zst")):
+        try:
+            with open(p, "rb") as fh:
+                blob = fh.read()
+        except FileNotFoundError:
+            continue
+        raw = blob
+        if codec == "zstd":
+            import pyarrow as pa
+
+            # 8-byte LE plaintext-size header (pyarrow's one-shot
+            # decompress needs the exact output size)
+            size = int.from_bytes(blob[:8], "little")
+            raw = pa.Codec("zstd").decompress(blob[8:], asbytes=True, decompressed_size=size)
+        return json.loads(raw), codec, _etag(blob)
+    return None
+
+
+def _sidecars(root: str, dataset_uuid: str) -> list[tuple[int, str]]:
+    """(version, path) of every partition sidecar of the dataset, named
+    ``_partitions_v<N:08d>_<token>.parquet`` or (older) without a token."""
+    sdir = os.path.join(root, dataset_uuid, SIDECAR_DIR)
+    if not os.path.isdir(sdir):
+        return []
+    return [
+        (int(name[13:21]), os.path.join(sdir, name))
+        for name in os.listdir(sdir)
+        if name.startswith("_partitions_v") and name.endswith(".parquet")
+    ]
 
 
 def _write_partitions_sidecar(
@@ -964,79 +1002,49 @@ def _write_partitions_sidecar(
 
     # rewrite of a loaded-but-untouched lazy map: write straight from the
     # held arrow columns — no dict materialization on the commit path
-    lazy_cols = (
-        partitions.arrow_columns()
-        if isinstance(partitions, _SidecarPartitions)
-        else None
-    )
-    if lazy_cols is not None:
-        src = partitions.source_path
-        if src and os.path.exists(src) and os.path.abspath(src) != os.path.abspath(path):
-            # unmaterialized map == exact bytes of its source sidecar:
-            # copy instead of re-encoding (metadata-only commit of a
-            # 1M-partition dataset drops from ~0.6 s parquet encode to a
-            # file copy)
-            import shutil
+    lazy = isinstance(partitions, _SidecarPartitions)
+    lazy_cols = partitions.arrow_columns() if lazy else None
+    if lazy_cols is not None and partitions.source_path:
+        # unmaterialized map == exact bytes of its source sidecar: copy
+        # instead of re-encoding (metadata-only commit of a 1M-partition
+        # dataset drops from ~0.6 s parquet encode to a file copy)
+        import shutil
 
-            os.makedirs(os.path.dirname(path), exist_ok=True)
-            fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".tmp")
-            os.close(fd)
-            try:
-                shutil.copyfile(src, tmp)
-                os.replace(tmp, path)
-            except BaseException:
-                if os.path.exists(tmp):
-                    os.unlink(tmp)
-                raise
+        src = partitions.source_path
+        try:
+            _atomic_write(path, lambda tmp: shutil.copyfile(src, tmp))
             partitions.source_path = path  # commit cleanup may unlink src
             return partitions
-        labels_arr, files_arr = lazy_cols
-        n = len(labels_arr)
-        table = pa.table(
-            {
-                "label": labels_arr,
-                "file": files_arr,
-                "rows": pa.nulls(n, type=pa.int64()),
-                "stats": pa.nulls(n, type=pa.string()),
-                "extra": pa.nulls(n, type=pa.string()),
-            }
-        )
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".tmp")
-        os.close(fd)
-        try:
-            pq.write_table(table, tmp, compression="zstd")
-            os.replace(tmp, path)
-        except BaseException:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
-            raise
-        partitions.source_path = path
-        return partitions
-
-    known = {"file", "rows", "stats"}
-    entries = list(partitions.values())
-    labels = list(partitions.keys())
-    n = len(entries)
-    # ONE fused pass extracts files and detects the dominant all-plain
-    # shape (every entry exactly {"file": ...}); a second single loop
-    # builds the remaining columns only when some entry is mixed-shape.
-    # The earlier form paid a dedicated all() pass plus up to four
-    # per-column comprehensions over 1M entries — at this size those
-    # Python passes cost more than the parquet encode itself (profiled:
-    # 0.56 s of passes vs 0.21 s of zstd encode at 1M).
-    files = []
-    plain = True
-    for e in entries:
-        files.append(e.get("file"))
-        if plain and (len(e) != 1 or "file" not in e):
-            plain = False
+        except FileNotFoundError:
+            pass  # a later commit already cleaned src up: re-encode
+    if lazy_cols is not None:
+        labels_pa, files_pa = lazy_cols
+        plain = True
+    else:
+        entries = list(partitions.values())
+        # ONE fused pass extracts files and detects the dominant all-plain
+        # shape (every entry exactly {"file": ...}); a second single loop
+        # builds the remaining columns only when some entry is
+        # mixed-shape. The earlier form paid a dedicated all() pass plus
+        # up to four per-column comprehensions over 1M entries — at this
+        # size those Python passes cost more than the parquet encode
+        # itself (profiled: 0.56 s of passes vs 0.21 s of zstd at 1M).
+        files = []
+        plain = True
+        for e in entries:
+            files.append(e.get("file"))
+            if plain and (len(e) != 1 or "file" not in e):
+                plain = False
+        labels_pa = pa.array(list(partitions.keys()), type=pa.string())
+        files_pa = pa.array(files, type=pa.string())
+    n = len(labels_pa)
     if plain:
         # byte-identical output: the columns would have been all-null
         rows_arr: Any = pa.nulls(n, type=pa.int64())
         stats_arr: Any = pa.nulls(n, type=pa.string())
         extra_arr: Any = pa.nulls(n, type=pa.string())
     else:
+        known = {"file", "rows", "stats"}
         rows_list: list = []
         stats_list: list = []
         extra_list: list = []
@@ -1055,8 +1063,6 @@ def _write_partitions_sidecar(
         rows_arr = pa.array(rows_list, type=pa.int64())
         stats_arr = pa.array(stats_list, type=pa.string())
         extra_arr = pa.array(extra_list, type=pa.string())
-    labels_pa = pa.array(labels, type=pa.string())
-    files_pa = pa.array(files, type=pa.string())
     table = pa.table(
         {
             "label": labels_pa,
@@ -1066,19 +1072,11 @@ def _write_partitions_sidecar(
             "extra": extra_arr,
         }
     )
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".tmp")
-    os.close(fd)
-    try:
-        pq.write_table(table, tmp, compression="zstd")
-        os.replace(tmp, path)
-    except BaseException:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
-        raise
-    if plain:
-        return _SidecarPartitions(labels_pa, files_pa, source_path=path)
-    return None
+    _atomic_write(path, lambda tmp: pq.write_table(table, tmp, compression="zstd"))
+    if lazy_cols is not None:
+        partitions.source_path = path
+        return partitions
+    return _SidecarPartitions(labels_pa, files_pa, source_path=path) if plain else None
 
 
 def _read_partitions_sidecar(path: str) -> MutableMapping:

@@ -846,7 +846,7 @@ def delete_dataset(root: str, dataset_uuid: str) -> None:
                 os.unlink(manifest_path)
 
     try:
-        raw, _codec = DatasetManifest._load_raw_dict(root, dataset_uuid)
+        raw = DatasetManifest._load_raw_dict(root, dataset_uuid)[0]
         sidecar = bool(raw.get("partitions_ref"))
     except Exception:
         sidecar = False
@@ -1026,22 +1026,19 @@ def expire_snapshots(root: str, dataset_uuid: str, keep_last: int = 1) -> list[i
         if name.startswith("_v") and ".manifest" in name
     )
     victims = snaps[: max(0, len(snaps) - keep_last)]
-    from kartothek_spark.core.manifest import SIDECAR_DIR
+    from kartothek_spark.core.manifest import _sidecars
 
     for v in victims:
         for suffix in (".json", ".json.zst"):
             p = os.path.join(hist, f"_v{v:08d}.manifest{suffix}")
             if os.path.exists(p):
                 os.unlink(p)
-        # the expired version's partition-list sidecar goes with it —
-        # EXCEPT the live version's, which the live manifest still points
-        # at (keep_last=0 expires the live snapshot but not the live state)
-        if v != manifest.version:
-            sc = os.path.join(
-                root, dataset_uuid, SIDECAR_DIR, f"_partitions_v{v:08d}.parquet"
-            )
-            if os.path.exists(sc):
-                os.unlink(sc)
+    # the expired versions' partition-list sidecars go with them — EXCEPT
+    # the live version's, which the live manifest still points at
+    # (keep_last=0 expires the live snapshot but not the live state)
+    for v, sc in _sidecars(root, dataset_uuid):
+        if v in victims and v != manifest.version:
+            os.unlink(sc)
     return victims
 
 

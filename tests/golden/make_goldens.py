@@ -111,6 +111,11 @@ def expected_sidecar_manifest_dict() -> dict:
     }
 
 
+def _write(m, path: str) -> None:
+    with open(path, "wb") as fh:
+        fh.write(m._serialize())
+
+
 def make() -> None:
     import json
 
@@ -156,18 +161,18 @@ def make() -> None:
     pq.write_table(idx, os.path.join(idx_dir, "part-00000.parquet"))
 
     # manifests: identical content in both codecs, written by the engine's
-    # own serializer (_write_blob) so the goldens pin the writer too
+    # own serializer (_serialize) so the goldens pin the writer too
     m.storage_format = "json"
-    m._write_blob(os.path.join(HERE, "golden.by-dataset-metadata.json"))
+    _write(m, os.path.join(HERE, "golden.by-dataset-metadata.json"))
     m.storage_format = "zstd"
-    m._write_blob(os.path.join(HERE, "golden.by-dataset-metadata.json.zst"))
+    _write(m, os.path.join(HERE, "golden.by-dataset-metadata.json.zst"))
 
     # history snapshot so time-travel load paths are pinned as well
     hist = os.path.join(HERE, "golden", "_history")
     shutil.rmtree(hist, ignore_errors=True)
     os.makedirs(hist)
     m.storage_format = "json"
-    m._write_blob(os.path.join(hist, "_v00000001.manifest.json"))
+    _write(m, os.path.join(hist, "_v00000001.manifest.json"))
 
     # ---- sidecar-layout golden: the partition list promoted to the
     # versioned parquet sidecar (core/manifest.py SIDECAR_THRESHOLD
@@ -201,7 +206,7 @@ def make() -> None:
     sm.committed_at = COMMITTED_AT
     sm._sidecar_ref = SIDECAR_REL
     sm.storage_format = "json"
-    sm._write_blob(os.path.join(HERE, "golden_sidecar.by-dataset-metadata.json"))
+    _write(sm, os.path.join(HERE, "golden_sidecar.by-dataset-metadata.json"))
 
     make_binkey()
     make_orc()
@@ -269,7 +274,7 @@ def make_binkey() -> None:
     m = DatasetManifest.from_dict(d, root=HERE)
     m.committed_at = COMMITTED_AT
     m.storage_format = "json"
-    m._write_blob(os.path.join(HERE, "golden_binkey.by-dataset-metadata.json"))
+    _write(m, os.path.join(HERE, "golden_binkey.by-dataset-metadata.json"))
 
 
 # ---- ORC-format golden: the fourth table format's committed layout
@@ -317,7 +322,7 @@ def make_orc() -> None:
     m = DatasetManifest.from_dict(d, root=HERE)
     m.committed_at = COMMITTED_AT
     m.storage_format = "json"
-    m._write_blob(os.path.join(HERE, "golden_orc.by-dataset-metadata.json"))
+    _write(m, os.path.join(HERE, "golden_orc.by-dataset-metadata.json"))
 
 
 if __name__ == "__main__":

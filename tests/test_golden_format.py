@@ -60,10 +60,7 @@ def test_writer_emits_byte_identical_manifest(tmp_path):
     m = DatasetManifest.from_dict(_expected(), root=str(tmp_path))
     m.committed_at = COMMITTED_AT
     m.storage_format = "json"
-    out = os.path.join(str(tmp_path), "out.json")
-    m._write_blob(out)
-    with open(out, "rb") as fh:
-        got = fh.read()
+    got = m._serialize()
     with open(os.path.join(GOLDEN_ROOT, "golden.by-dataset-metadata.json"), "rb") as fh:
         want = fh.read()
     assert got == want

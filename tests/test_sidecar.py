@@ -35,6 +35,10 @@ def _store(spark, root, uuid, **kw):
     ), orders
 
 
+def _live_ref(root, uuid):
+    return DatasetManifest._load_raw_dict(root, uuid)[0]["partitions_ref"]
+
+
 def test_sidecar_promotion_and_roundtrip(spark, tmp_path, low_threshold):
     root = str(tmp_path)
     m, orders = _store(spark, root, "sc")
@@ -83,7 +87,7 @@ def test_sidecar_mutation_supersedes_and_gc_keeps(spark, tmp_path, low_threshold
     # without history the superseded sidecar is cleaned by the commit
     sdir = os.path.join(root, "sc", SIDECAR_DIR)
     names = sorted(os.listdir(sdir))
-    assert names == [f"_partitions_v{m2.version:08d}.parquet"]
+    assert names == [os.path.basename(_live_ref(root, "sc"))]
     assert os.path.basename(v1_ref) not in names
     # GC never touches the live sidecar (underscore bookkeeping rule)
     garbage_collect_dataset(root, "sc")
@@ -106,7 +110,7 @@ def test_sidecar_history_time_travel_and_expire(spark, tmp_path, low_threshold):
     assert len(os.listdir(sdir)) == 2  # both versions retained
     # expiring v1 removes its sidecar, keeps the live one
     assert expire_snapshots(root, "hist", keep_last=1) == [v1]
-    assert sorted(os.listdir(sdir)) == [f"_partitions_v{live.version:08d}.parquet"]
+    assert sorted(os.listdir(sdir)) == [os.path.basename(_live_ref(root, "hist"))]
     with pytest.raises(ValueError, match="no snapshot"):
         DatasetManifest.load(root, "hist", version=v1)
     assert read_table(spark, root, "hist").count() == orders.count() + 3
