@@ -2766,7 +2766,7 @@ def dedup_cross_corpus(spark, sf_dir):
         for name, df in (("l", docs), ("r", bench)):
             idc = "doc_id" if name == "l" else "bench_id"
             base, reps = _minhash_side(
-                df, "text", idc, MINHASH_NUM_HASHES, persist=False
+                df, "text", idc, MINHASH_NUM_HASHES, lifecycle="lazy"
             )
             base.write.parquet(os.path.join(root, f"base_{name}"))
             reps.write.parquet(os.path.join(root, f"reps_{name}"))
@@ -2776,9 +2776,11 @@ def dedup_cross_corpus(spark, sf_dir):
     return minhash_cross_pairs_from_sides(
         rd("base_l"), rd("reps_l"), rd("base_r"), rd("reps_r"),
         threshold=0.35, left_id="doc_id", right_id="bench_id",
-        # sides are plain parquet reads (nothing persisted to release), so
-        # the gate's single count skips the eager checkpoint job entirely
-        eager=False,
+        # lazy: the sides are fixture parquet reads that already hold the
+        # signatures, so no MinHash battery recomputes per branch (only
+        # the scan repeats), and this function owns no pins to release;
+        # the gate's single count skips the checkpoint job
+        lifecycle="lazy",
     )
 
 
@@ -3104,7 +3106,7 @@ def corpus_source_overlap(spark, sf_dir):
     of feed B is already inside feed A."""
     from kartothek_spark.operators.contamination import source_overlap
 
-    return source_overlap(_t(spark, sf_dir, "documents"), n=8, materialize=True)
+    return source_overlap(_t(spark, sf_dir, "documents"), n=8)
 
 
 def embedding_hard_negatives(spark, sf_dir):
@@ -3685,7 +3687,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     from kartothek_spark.operators.dedup import minhash_lsh_pairs
 
     return minhash_lsh_pairs(
-        _t(spark, sf_dir, "documents"), threshold=0.2, materialize=False
+        _t(spark, sf_dir, "documents"), threshold=0.2, lifecycle="scoped"
     )
 
 
@@ -3776,7 +3778,7 @@ def dedup_simhash(spark, sf_dir):
     from kartothek_spark.operators.dedup import simhash_pairs
 
     return simhash_pairs(
-        _t(spark, sf_dir, "documents"), max_hamming=6, materialize=False
+        _t(spark, sf_dir, "documents"), max_hamming=6, lifecycle="scoped"
     )
 
 
@@ -3784,7 +3786,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
     from kartothek_spark.operators.dedup import ngram_jaccard_pairs
 
     return ngram_jaccard_pairs(
-        _t(spark, sf_dir, "documents"), n=4, threshold=0.35, materialize=False
+        _t(spark, sf_dir, "documents"), n=4, threshold=0.35, lifecycle="scoped"
     )
 
 
@@ -3805,7 +3807,7 @@ def dedup_containment(spark, sf_dir):
         F.expr("substring(text, 1, 120)").alias("text"),
     )
     return ngram_containment_pairs(
-        docs.unionByName(snips), n=6, threshold=0.8, materialize=False
+        docs.unionByName(snips), n=6, threshold=0.8, lifecycle="scoped"
     )
 
 
@@ -3838,7 +3840,7 @@ def dedup_winnow_pairs(spark, sf_dir):
         F.expr("substring(text, 1, 120)").alias("text"),
     )
     return winnow_dup_pairs(
-        docs.unionByName(snips), k=8, w=4, min_shared=12, materialize=False
+        docs.unionByName(snips), k=8, w=4, min_shared=12, lifecycle="scoped"
     )
 
 
@@ -3967,7 +3969,7 @@ def dedup_fuzzy_pairs(spark, sf_dir):
         "doc_id", F.expr("substring(text, 1, 24)").alias("key")
     )
     return edit_distance_pairs(
-        docs, max_dist=2, string_col="key", id_col="doc_id", materialize=False
+        docs, max_dist=2, string_col="key", id_col="doc_id", lifecycle="scoped"
     )
 
 
@@ -3998,7 +4000,7 @@ def corpus_fuzzy_join(spark, sf_dir):
         right_on="qkey",
         left_id="doc_id",
         right_id="probe_id",
-        materialize=False,
+        lifecycle="scoped",
     )
 
 

@@ -56,12 +56,13 @@ def release_on_gc(out: DataFrame, *pins: DataFrame) -> DataFrame:
     """Tie persisted ``pins`` to the lifetime of ``out`` (lazy return).
 
     The pair operators pin shared sub-frames (persist) because their
-    result plan consumes them from several branches. The classic form
-    eagerly ``localCheckpoint``s the result so the pins can be released
-    before returning — at the price of one extra job plus a full
-    materialization of the result to executor storage, even when the
-    caller runs a single action (count, one write) and never reuses the
-    frame. This helper is the lazy alternative: the pins stay cached
+    result plan consumes them from several branches. The ``"checkpoint"``
+    lifecycle (:func:`finish`) eagerly ``localCheckpoint``s the result so
+    the pins can be released before returning — at the price of one extra
+    job plus a full materialization of the result to executor storage,
+    even when the caller runs a single action (count, one write) and never
+    reuses the frame. This helper is the ``"scoped"`` lifecycle, the lazy
+    alternative: the pins stay cached
     (first action computes each pinned frame once, every branch reuses
     the blocks) and are unpersisted when the returned DataFrame is
     garbage-collected. Callers that run MANY actions over the result
@@ -92,3 +93,51 @@ def release_on_gc(out: DataFrame, *pins: DataFrame) -> DataFrame:
 
     weakref.finalize(out, _release)
     return out
+
+
+LIFECYCLES = ("checkpoint", "scoped", "lazy")
+
+
+def _check_lifecycle(lifecycle: str) -> None:
+    if lifecycle not in LIFECYCLES:
+        raise ValueError(f"lifecycle must be one of {LIFECYCLES}, got {lifecycle!r}")
+
+
+def pin(df: DataFrame, lifecycle: str) -> DataFrame:
+    """Persist ``df`` — a sub-frame an operator's plan reads from several
+    branches — unless ``lifecycle`` is ``"lazy"``. Release it through
+    :func:`finish`."""
+    _check_lifecycle(lifecycle)
+    return df if lifecycle == "lazy" else df.persist()
+
+
+def finish(out: DataFrame, lifecycle: str, *pins: DataFrame) -> DataFrame:
+    """Return an operator's result ``out`` under ``lifecycle``, releasing
+    the frames :func:`pin` persisted for it. The one result-lifecycle
+    mechanism of the pair operators (their ``lifecycle`` parameter):
+
+    - ``"checkpoint"`` (the default): ``localCheckpoint(eager=True)`` the
+      result — one extra job that stores it in executor storage, then
+      the pins are unpersisted in a ``finally``, so a failure raised
+      inside the checkpoint job (a guard such as ``max_len``) leaks no
+      storage either. Deterministic cleanup; the result is cheap to
+      reuse across many actions.
+    - ``"scoped"``: lazy return; the pins stay cached for the caller's
+      actions (each pinned frame computes once, every branch reuses its
+      blocks) and unpersist when ``out`` is garbage-collected — see
+      :func:`release_on_gc`, whose LIFETIME note applies to any frame
+      derived from the result.
+    - ``"lazy"``: the plan as is, nothing pinned (:func:`pin` persisted
+      nothing), so branches recompute — for plan inspection and for
+      pipelines that manage caching themselves.
+    """
+    _check_lifecycle(lifecycle)
+    if lifecycle == "scoped":
+        return release_on_gc(out, *pins)
+    if lifecycle == "lazy":
+        return out
+    try:
+        return out.localCheckpoint(eager=True)
+    finally:
+        for f in pins:
+            f.unpersist()

@@ -281,7 +281,6 @@ def source_overlap(
     text_col: str = "text",
     group_col: str = "source",
     id_col: str = "doc_id",
-    materialize: bool = True,
 ) -> DataFrame:
     """Pairwise n-gram overlap matrix between corpus GROUPS (sources,
     snapshots, providers) — the dataset-procurement question "how much
@@ -320,15 +319,8 @@ def source_overlap(
         .select("grp", F.explode(shingles_from_tokens(F.col("_t"), n)).alias("_sh"))
         .select("grp", h60(F.col("_sh")).alias("_h"))
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    if materialize:
-        sh = sh.localCheckpoint(eager=True)
-    else:
-        # lazy-with-scoped-release: persist pins the distinct shingle set
-        # for the three consumers within the caller's single action and
-        # the pin releases when the result frame is GC'd (guide §5) —
-        # same one-corpus-pass guarantee, no eager job, no leaked blocks
-        sh = sh.persist()
     totals = sh.groupBy("grp").agg(F.count("*").alias("n"))
     pairs = (
         sh.alias("a")
@@ -353,10 +345,6 @@ def source_overlap(
             ).alias("jaccard"),
         )
     )
-    if not materialize:
-        from kartothek_spark.operators._util import release_on_gc
-
-        out = release_on_gc(out, sh)
     return out
 
 

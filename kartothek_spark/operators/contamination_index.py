@@ -82,7 +82,7 @@ def build_contamination_index(
     manifest metadata — different parameters are a different index."""
     from kartothek_spark.dataset.write import store_dataframe_as_dataset
 
-    base, reps = _minhash_side(benchmark, text_col, id_col, num_hashes, persist=True)
+    base, reps = _minhash_side(benchmark, text_col, id_col, num_hashes)
     try:
         meta = {
             META_NUM_HASHES: num_hashes,
@@ -148,7 +148,7 @@ def sync_contamination_index(
     num_hashes = int(manifest.metadata[META_NUM_HASHES])
     bands = int(manifest.metadata[META_BANDS])
 
-    base, reps = _minhash_side(new_bench, text_col, id_col, num_hashes, persist=True)
+    base, reps = _minhash_side(new_bench, text_col, id_col, num_hashes)
     try:
         known = read_table(
             spark, root, index_uuid, columns=["ck", "bench_id"]
@@ -290,7 +290,7 @@ def minhash_cross_pairs_indexed(
     manifest = DatasetManifest.load(root, index_uuid)
     num_hashes = int(manifest.metadata[META_NUM_HASHES])
     bands = int(manifest.metadata[META_BANDS])
-    base_l, reps_l = _minhash_side(train, text_col, id_col, num_hashes, persist=True)
+    base_l, reps_l = _minhash_side(train, text_col, id_col, num_hashes)
     try:
         hits = _hit_cks(
             spark, reps_l, base_l, root, index_uuid,
@@ -337,7 +337,7 @@ def fuzzy_decontaminate_indexed(
     manifest = DatasetManifest.load(root, index_uuid)
     num_hashes = int(manifest.metadata[META_NUM_HASHES])
     bands = int(manifest.metadata[META_BANDS])
-    base_l, reps_l = _minhash_side(train, text_col, id_col, num_hashes, persist=True)
+    base_l, reps_l = _minhash_side(train, text_col, id_col, num_hashes)
     try:
         hit_cks = _hit_cks(
             spark, reps_l, base_l, root, index_uuid,

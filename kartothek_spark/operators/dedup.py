@@ -37,7 +37,7 @@ from kartothek_spark.functions.hashing import (
     word_shingles_sql,
 )
 from kartothek_spark.operators.text import fingerprint, fingerprint_sql
-from kartothek_spark.operators._util import release_on_gc, scale_out
+from kartothek_spark.operators._util import finish, pin, scale_out
 
 # MinHash defaults: 12 permutations in 4 bands × 3 rows
 MINHASH_NUM_HASHES = 12
@@ -176,12 +176,16 @@ def minhash_lsh_pairs(
     num_hashes: int = MINHASH_NUM_HASHES,
     bands: int = MINHASH_BANDS,
     max_band_bucket: int | None = MAX_BAND_BUCKET,
-    materialize: bool = True,
+    lifecycle: str = "checkpoint",
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash banding + exact Jaccard verification.
 
     ``max_band_bucket`` caps candidate generation per (band, key) bucket —
     see :data:`MAX_BAND_BUCKET` for the recall tradeoff; ``None`` disables.
+    ``lifecycle`` picks how the result and its pinned base are released
+    (``"checkpoint"``, ``"scoped"`` or ``"lazy"`` — see
+    :func:`~kartothek_spark.operators._util.finish`); the pair operators
+    of this module share it.
 
     Plan shape (the 100 TB shape): per-row signature FOLD over the
     shingle array (:func:`minhash_sig_expr` — one md5 per shingle, zero
@@ -196,7 +200,7 @@ def minhash_lsh_pairs(
     # _banded helpers (one copy of the skew-guard machinery for the
     # single-corpus and cross-corpus operators — see their docstrings for
     # the staging, content-key, and hashed-shingle rationale)
-    base, sig = _minhash_side(df, text_col, id_col, num_hashes)
+    base, sig = _minhash_side(df, text_col, id_col, num_hashes, lifecycle)
     members = base.select("__id", "__ck")
     banded = _cap_band_buckets(_banded(sig, bands, rows), max_band_bucket)
 
@@ -257,21 +261,7 @@ def minhash_lsh_pairs(
     )
     if threshold > 1.0:
         intra = intra.where(F.lit(False))
-    verified = cross.unionByName(intra)
-    if not materialize:
-        # lazy-with-scoped-release (guide §5): the pinned base stays
-        # cached — the caller's single action computes it once and every
-        # branch reuses the blocks — and unpersists when the result is
-        # GC'd. Skips the eager checkpoint's extra job + full pair-set
-        # materialization; callers that run MANY actions over the result
-        # should keep materialize=True.
-        return release_on_gc(verified, base)
-    # deterministic cleanup: materialize the (small) pair set and release
-    # the cached frames — a lazy return would otherwise leak them into the
-    # caller's session forever
-    out = verified.localCheckpoint(eager=True)
-    base.unpersist()
-    return out
+    return finish(cross.unionByName(intra), lifecycle, base)
 
 
 def _minhash_side_sql(
@@ -438,7 +428,7 @@ def simhash_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
-    materialize: bool = True,
+    lifecycle: str = "checkpoint",
     max_band_bucket: int | None = MAX_BAND_BUCKET,
 ) -> DataFrame:
     """Near-dup pairs whose SimHashes differ in <= max_hamming bits.
@@ -459,7 +449,7 @@ def simhash_pairs(
     # left lazy, the explode + 60-aggregate fingerprint job re-runs once
     # per branch side (~6 evaluations — measured 3.5x wall on the sf0.1
     # bench before this pin)
-    base = simhash_df(df, text_col, id_col).persist()
+    base = pin(simhash_df(df, text_col, id_col), lifecycle)
     reps = base.groupBy("__sim").agg(F.min("__id").alias("__id"))
     mask = (1 << SIMHASH_BAND_BITS) - 1
     banded = reps.select(
@@ -511,12 +501,7 @@ def simhash_pairs(
         F.col("ir.__id").alias("id_b"),
         F.lit(0).cast("integer").alias("hamming"),
     )
-    if not materialize:
-        # lazy-with-scoped-release — see minhash_lsh_pairs
-        return release_on_gc(cross.unionByName(intra), base)
-    out = cross.unionByName(intra).localCheckpoint(eager=True)
-    base.unpersist()
-    return out
+    return finish(cross.unionByName(intra), lifecycle, base)
 
 
 def simhash_pairs_sql(
@@ -609,7 +594,7 @@ def ngram_jaccard_pairs(
     n: int = 4,
     threshold: float = 0.35,
     max_df: int = NGRAM_MAX_DF,
-    materialize: bool = True,
+    lifecycle: str = "checkpoint",
 ) -> DataFrame:
     """Character-n-gram Jaccard via inverted index: explode grams →
     drop grams with document frequency > max_df (stop-grams; without the
@@ -626,7 +611,7 @@ def ngram_jaccard_pairs(
     # one-exchange capped index (see _df_capped_gram_index); it feeds
     # three consumers (sizes + both self-join sides), so pin it — the
     # single persist replaces the former two (raw grams + capped index)
-    inv = _df_capped_gram_index(df, text_col, id_col, n, max_df).persist()
+    inv = pin(_df_capped_gram_index(df, text_col, id_col, n, max_df), lifecycle)
     sizes = inv.groupBy("__id").agg(F.count("*").alias("__n"))
     l, r = inv.alias("l"), inv.alias("r")
     shared = (
@@ -650,14 +635,7 @@ def ngram_jaccard_pairs(
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    if not materialize:
-        # lazy-with-scoped-release — see minhash_lsh_pairs
-        return release_on_gc(result, inv)
-    # deterministic cleanup: materialize the (small) pair set, release the
-    # cached inverted index (lazy return would leak the cache forever)
-    out = result.localCheckpoint(eager=True)
-    inv.unpersist()
-    return out
+    return finish(result, lifecycle, inv)
 
 
 def winnow_fingerprints(
@@ -776,8 +754,7 @@ def winnow_dup_pairs(
     w: int = 4,
     min_shared: int = 3,
     max_df: int = NGRAM_MAX_DF,
-    eager: bool = True,
-    materialize: bool = True,
+    lifecycle: str = "checkpoint",
 ) -> DataFrame:
     """Plagiarism-style overlap pairs on WINNOWED fingerprints: docs
     sharing >= ``min_shared`` selected fingerprints (id_a < id_b,
@@ -785,10 +762,9 @@ def winnow_dup_pairs(
     n-gram miners but over a ~1/w-sparsified set — the index the MOSS
     service builds, at a fraction of the full-gram cost.
 
-    ``eager=False`` returns the lazy, pin-free plan (the fingerprint
-    pass recomputes per downstream branch instead of being persisted) —
-    for plan tests and composition into larger lazy pipelines. Pipelines
-    that query repeatedly should persist the fingerprints once instead:
+    Under ``lifecycle="lazy"`` the fingerprint pass recomputes per
+    downstream branch instead of being pinned. Pipelines that query
+    repeatedly should persist the fingerprints once instead:
     :mod:`~kartothek_spark.operators.winnow_index`, whose pair query is
     lazy by construction."""
     fp = (
@@ -796,8 +772,7 @@ def winnow_dup_pairs(
         .select(F.col(id_col).alias("__id"), F.col("fp").alias("g"))
         .distinct()
     )
-    if eager:
-        fp = fp.persist()
+    fp = pin(fp, lifecycle)
     rare = fp.groupBy("g").count().where(F.col("count") <= max_df).select("g")
     inv = fp.join(rare, "g")
     l, r = inv.alias("l"), inv.alias("r")
@@ -807,14 +782,7 @@ def winnow_dup_pairs(
         .agg(F.count("*").alias("n_shared"))
         .where(F.col("n_shared") >= min_shared)
     )
-    if not eager:
-        return result
-    if not materialize:
-        # lazy-with-scoped-release — see minhash_lsh_pairs
-        return release_on_gc(result, fp)
-    out = result.localCheckpoint(eager=True)
-    fp.unpersist()
-    return out
+    return finish(result, lifecycle, fp)
 
 
 def winnow_dup_pairs_sql(
@@ -848,7 +816,7 @@ def ngram_containment_pairs(
     n: int = 4,
     threshold: float = 0.8,
     max_df: int = NGRAM_MAX_DF,
-    materialize: bool = True,
+    lifecycle: str = "checkpoint",
 ) -> DataFrame:
     """Asymmetric n-gram CONTAINMENT pairs — the near-dup signal Jaccard
     structurally misses: a short doc nested inside a much longer one
@@ -869,7 +837,7 @@ def ngram_containment_pairs(
     df = scale_out(df)
     # one-exchange capped index (see _df_capped_gram_index), pinned for
     # its three consumers — the single persist replaces the former two
-    inv = _df_capped_gram_index(df, text_col, id_col, n, max_df).persist()
+    inv = pin(_df_capped_gram_index(df, text_col, id_col, n, max_df), lifecycle)
     sizes = inv.groupBy("__id").agg(F.count("*").alias("__n"))
     l, r = inv.alias("l"), inv.alias("r")
     shared = (
@@ -890,12 +858,7 @@ def ngram_containment_pairs(
         )
         .where(F.greatest("cont_a", "cont_b") >= threshold)
     )
-    if not materialize:
-        # lazy-with-scoped-release — see minhash_lsh_pairs
-        return release_on_gc(result, inv)
-    out = result.localCheckpoint(eager=True)
-    inv.unpersist()
-    return out
+    return finish(result, lifecycle, inv)
 
 
 def ngram_containment_pairs_sql(
@@ -1226,7 +1189,7 @@ def trim_duplicated_spans(
     order (token-normalized rendering: lower-cased, single-spaced)."""
     w = window_tokens
     toks = df.select(F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("__toks"))
-    toks = toks.persist()
+    toks = pin(toks, "checkpoint")
     whs = F.transform(
         F.sequence(F.lit(0), F.greatest(F.size("__toks") - w, F.lit(0))),
         lambda i: h60(F.concat_ws(" ", F.slice(F.col("__toks"), i + 1, w))),
@@ -1280,9 +1243,7 @@ def trim_duplicated_spans(
             (F.col("n_tokens") - F.coalesce(F.col("__n_kept"), F.lit(0))).cast("long").alias("n_removed"),
         )
     )
-    out = out.localCheckpoint(eager=True)
-    toks.unpersist()
-    return out
+    return finish(out, "checkpoint", toks)
 
 
 def trim_duplicated_spans_sql(
@@ -1463,8 +1424,7 @@ def edit_distance_pairs(
     string_col: str = "text",
     id_col: str = "doc_id",
     max_len: int = 48,
-    eager: bool = True,
-    materialize: bool = True,
+    lifecycle: str = "checkpoint",
 ) -> DataFrame:
     """All pairs ``(id_a, id_b, dist)`` with ``levenshtein <= max_dist``
     over a SHORT string key — near-duplicate titles / URLs / leading
@@ -1490,11 +1450,7 @@ def edit_distance_pairs(
     joins. Pair ENUMERATION over a mega-duplicate group is inherently
     m²/2 output rows — for corpora like that, :func:`dedup_exact` /
     :func:`apply_dedup` (representatives, no pair list) is the right
-    tool; this operator's contract is the explicit pair list.
-
-    ``eager=False`` skips the persist + localCheckpoint pins and returns
-    the LAZY plan (branches recompute): for plan inspection and for
-    composing into a pipeline that pins caching itself."""
+    tool; this operator's contract is the explicit pair list."""
     _check_fuzzy_args(max_dist)
     # persisted: base feeds FOUR branches (reps, the expansion's two
     # sides, the exact self-join) — left lazy, the scan + variant pass
@@ -1505,12 +1461,9 @@ def edit_distance_pairs(
         .select(F.col(id_col).alias("__id"), F.col(string_col).alias("__s"))
         .where(F.col("__s").isNotNull())
     )
-    if eager:
-        base = base.persist()
+    base = pin(base, lifecycle)
     # one representative per distinct key (map-side-combined min)
-    reps = base.groupBy("__s").agg(F.min("__id").alias("__id"))
-    if eager:
-        reps = reps.persist()
+    reps = pin(base.groupBy("__s").agg(F.min("__id").alias("__id")), lifecycle)
     blocks = _deletion_blocks(reps, max_dist, max_len)
     # candidate generation is ONE shuffle (groupBy the 8-byte block key),
     # not a self-join that shuffles the block rows twice and sorts both
@@ -1557,20 +1510,7 @@ def edit_distance_pairs(
             F.lit(0).cast("long").alias("dist"),
         )
     )
-    out = cross.unionByName(exact)
-    if eager and not materialize:
-        # lazy-with-scoped-release — see minhash_lsh_pairs
-        return release_on_gc(out, reps, base)
-    if eager:
-        try:
-            out = out.localCheckpoint(eager=True)
-        finally:
-            # unpersist on failure too (e.g. the max_len guard raising
-            # mid-checkpoint) — otherwise the pins leak executor storage
-            # for the life of the session
-            for frame in (reps, base):
-                frame.unpersist()
-    return out
+    return finish(cross.unionByName(exact), lifecycle, reps, base)
 
 
 def edit_distance_pairs_sql(
@@ -1609,8 +1549,7 @@ def fuzzy_join(
     left_id: str = "doc_id",
     right_id: str = "doc_id",
     max_len: int = 48,
-    eager: bool = True,
-    materialize: bool = True,
+    lifecycle: str = "checkpoint",
 ) -> DataFrame:
     """Two-sided edit-distance join: ``(left_id, right_id, dist)`` for
     every cross pair with ``levenshtein <= max_dist`` — matching a dirty
@@ -1618,8 +1557,7 @@ def fuzzy_join(
     an N x M cross join. Same complete deletion-neighborhood blocking and
     rep-collapse as :func:`edit_distance_pairs` (blocking over distinct
     keys per side; identical-key matches via a plain equi-join); output
-    ids keep the callers' column names (they must differ). ``eager=False``
-    returns the lazy, pin-free plan (see :func:`edit_distance_pairs`)."""
+    ids keep the callers' column names (they must differ)."""
     _check_fuzzy_args(max_dist)
     if left_id == right_id:
         raise ValueError("left_id and right_id must differ in the output")
@@ -1632,12 +1570,9 @@ def fuzzy_join(
         right.select(F.col(right_id).alias("__id"), F.col(right_on).alias("__s"))
         .where(F.col("__s").isNotNull())
     )
-    if eager:
-        lb, rb = lb.persist(), rb.persist()
-    lreps = lb.groupBy("__s").agg(F.min("__id").alias("__id"))
-    rreps = rb.groupBy("__s").agg(F.min("__id").alias("__id"))
-    if eager:
-        lreps, rreps = lreps.persist(), rreps.persist()
+    lb, rb = pin(lb, lifecycle), pin(rb, lifecycle)
+    lreps = pin(lb.groupBy("__s").agg(F.min("__id").alias("__id")), lifecycle)
+    rreps = pin(rb.groupBy("__s").agg(F.min("__id").alias("__id")), lifecycle)
     key_pairs = (
         _deletion_blocks(lreps, max_dist, max_len).alias("a")
         .join(_deletion_blocks(rreps, max_dist, max_len).alias("b"), "__blk")
@@ -1666,17 +1601,7 @@ def fuzzy_join(
             F.lit(0).cast("long").alias("dist"),
         )
     )
-    out = cross.unionByName(exact)
-    if eager and not materialize:
-        # lazy-with-scoped-release — see minhash_lsh_pairs
-        return release_on_gc(out, lreps, rreps, lb, rb)
-    if eager:
-        try:
-            out = out.localCheckpoint(eager=True)
-        finally:
-            for frame in (lreps, rreps, lb, rb):
-                frame.unpersist()
-    return out
+    return finish(cross.unionByName(exact), lifecycle, lreps, rreps, lb, rb)
 
 
 def fuzzy_join_sql(
@@ -1707,11 +1632,13 @@ FROM l JOIN r
 # ---------------------------------------------------------------------------
 
 def _minhash_side(
-    df: DataFrame, text_col: str, id_col: str, num_hashes: int, persist: bool = True
+    df: DataFrame, text_col: str, id_col: str, num_hashes: int,
+    lifecycle: str = "checkpoint",
 ):
     """(base, reps) for one corpus side — the shared MinHash front half of
     :func:`minhash_lsh_pairs` (self) and :func:`minhash_cross_pairs`
-    (two-sided). ``base`` is the persisted ``(__id, __sh, __ck)`` frame,
+    (two-sided). ``base`` is the ``(__id, __sh, __ck)`` frame, pinned
+    unless ``lifecycle`` is ``"lazy"`` (the caller releases it),
     ``reps`` one representative per distinct content carrying the per-row
     folded signature.
 
@@ -1740,11 +1667,7 @@ def _minhash_side(
             F.md5(F.concat_ws("\x01", "__t")).alias("__ck"),
         )
     )
-    # persist=False is the lazy/pin-free form (eager=False callers):
-    # nothing to unpersist, at the price of recomputing the tokenize
-    # stage per downstream branch
-    if persist:
-        base = base.persist()
+    base = pin(base, lifecycle)
     sigd = base.select("__id", "__ck", minhash_sig_expr("__sh", num_hashes).alias("__sig"))
     reps = sigd.groupBy("__ck").agg(
         F.min("__id").alias("__id"), F.first("__sig").alias("__sig")
@@ -1787,8 +1710,7 @@ def minhash_cross_pairs(
     num_hashes: int = MINHASH_NUM_HASHES,
     bands: int = MINHASH_BANDS,
     max_band_bucket: int | None = MAX_BAND_BUCKET,
-    eager: bool = True,
-    materialize: bool = True,
+    lifecycle: str = "checkpoint",
 ) -> DataFrame:
     """Cross-corpus near-duplicate pairs ``(left_id, right_id, jaccard)``
     at ``jaccard >= threshold`` — the fuzzy-decontamination primitive the
@@ -1802,29 +1724,18 @@ def minhash_cross_pairs(
     ONLY big shuffle is the (band, key) equi-join between the two banded
     rep sets, and exact Jaccard verifies candidates only. Exact-content
     cross matches (same key on both sides) pair through a direct key
-    equi-join with jaccard 1 and are excluded from banding candidates.
-    ``eager=False`` returns the lazy, pin-free plan (for plan tests /
-    caller-managed caching)."""
+    equi-join with jaccard 1 and are excluded from banding candidates."""
     if left_id == right_id:
         raise ValueError("left_id and right_id must differ in the output")
-    base_l, reps_l = _minhash_side(left, left_text, left_id, num_hashes, persist=eager)
-    base_r, reps_r = _minhash_side(right, right_text, right_id, num_hashes, persist=eager)
+    base_l, reps_l = _minhash_side(left, left_text, left_id, num_hashes, lifecycle)
+    base_r, reps_r = _minhash_side(right, right_text, right_id, num_hashes, lifecycle)
     out = minhash_cross_pairs_from_sides(
         base_l, reps_l, base_r, reps_r,
         threshold=threshold, left_id=left_id, right_id=right_id,
         num_hashes=num_hashes, bands=bands, max_band_bucket=max_band_bucket,
-        eager=False,
+        lifecycle="lazy",
     )
-    if eager and not materialize:
-        # lazy-with-scoped-release — see minhash_lsh_pairs
-        return release_on_gc(out, base_l, base_r)
-    if eager:
-        try:
-            out = out.localCheckpoint(eager=True)
-        finally:
-            base_l.unpersist()
-            base_r.unpersist()
-    return out
+    return finish(out, lifecycle, base_l, base_r)
 
 
 def minhash_cross_pairs_from_sides(
@@ -1838,7 +1749,7 @@ def minhash_cross_pairs_from_sides(
     num_hashes: int = MINHASH_NUM_HASHES,
     bands: int = MINHASH_BANDS,
     max_band_bucket: int | None = MAX_BAND_BUCKET,
-    eager: bool = True,
+    lifecycle: str = "checkpoint",
 ) -> DataFrame:
     """The pair machinery of :func:`minhash_cross_pairs` over PRECOMPUTED
     MinHash sides — ``base`` = ``(__id, __sh, __ck)``, ``reps`` =
@@ -1910,10 +1821,8 @@ def minhash_cross_pairs_from_sides(
         )
     )
     # persistence of the side frames belongs to the CALLER (this function
-    # may receive plain parquet reads); eager only pins the bounded output
-    if eager:
-        out = out.localCheckpoint(eager=True)
-    return out
+    # may receive plain parquet reads): no pins of its own to release
+    return finish(out, lifecycle)
 
 
 def fuzzy_decontaminate(
@@ -1925,7 +1834,6 @@ def fuzzy_decontaminate(
     num_hashes: int = MINHASH_NUM_HASHES,
     bands: int = MINHASH_BANDS,
     max_band_bucket: int | None = MAX_BAND_BUCKET,
-    materialize: bool = True,
 ) -> DataFrame:
     """The training corpus minus every doc NEAR-duplicate (Jaccard >=
     ``threshold``) to any benchmark doc — fuzzy decontamination, the
@@ -1946,7 +1854,6 @@ def fuzzy_decontaminate(
         num_hashes=num_hashes,
         bands=bands,
         max_band_bucket=max_band_bucket,
-        materialize=materialize,
     ).select(id_col).distinct()
     return train.join(hits, id_col, "left_anti")
 

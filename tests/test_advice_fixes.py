@@ -264,7 +264,7 @@ def test_batch0_purge_refuses_foreign_dir(tmp_path):
 
 
 def test_minhash_cross_pairs_lazy_path_pins_nothing(spark):
-    """minhash_cross_pairs(eager=False) is the lazy, pin-free form: it
+    """minhash_cross_pairs(lifecycle="lazy") is the pin-free form: it
     must not persist() frames it has no path to unpersist (the leak would
     hold executor storage for the life of the session)."""
     import os
@@ -285,16 +285,16 @@ def test_minhash_cross_pairs_lazy_path_pins_nothing(spark):
         spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
     )
     before = ids()
-    out = minhash_cross_pairs(docs, bench, right_id="bench_id", eager=False)
+    out = minhash_cross_pairs(docs, bench, right_id="bench_id", lifecycle="lazy")
     out.count()  # materialize through the lazy plan
     assert ids() == before  # the lazy path registered NO new pins
 
 
 def test_scoped_release_parity_and_pin_lifecycle(spark):
-    """materialize=False (lazy-with-scoped-release): same rows as the
-    eager form, pins held while the result frame is alive (so branches
-    share one computation of the pinned base), and released when the
-    result is garbage-collected — no storage leak, no eager job."""
+    """lifecycle="scoped" (lazy with scoped release): same rows as the
+    checkpoint form, pins held while the result frame is alive (so
+    branches share one computation of the pinned base), and released when
+    the result is garbage-collected — no storage leak, no eager job."""
     import gc
     import os
 
@@ -316,23 +316,55 @@ def test_scoped_release_parity_and_pin_lifecycle(spark):
         # the eager form's localCheckpoint RDD may stay registered until a
         # JVM GC unregisters it — compare pin IDs as a DELTA, not a count
         before = rdd_ids()
-        lazy = fn(docs, materialize=False, **kw)
+        lazy = fn(docs, lifecycle="scoped", **kw)
+        gc.collect()  # intermediate frames of the operator are gone
         assert sorted(map(tuple, lazy.collect())) == eager_rows
         pins = rdd_ids() - before
-        # the pinned base is registered while the result lives
-        assert pins
+        # the pinned base is registered while the result lives, and the
+        # action read it from the cache
+        assert pins, f"{fn.__name__}: pins released before the action"
+        assert "InMemoryTableScan" in _executed(lazy)
         del lazy
         gc.collect()
         assert not (rdd_ids() & pins)
 
 
-def test_semdedup_gate_pin_survives_projection(spark):
-    """The semdedup entry gates project the operator result, so the
-    scoped release must be CHAINED through the projection: the
-    assignment pin has to stay registered while the gate's frame is
-    alive (one assignment pass shared by all plan branches) and release
-    when the gate frame is collected. Regression test for the
-    derive-then-drop trap documented on release_on_gc."""
+def _executed(frame):
+    return frame._jdf.queryExecution().executedPlan().toString()
+
+
+def _scoped_gates():
+    """Every gate whose source passes ``lifecycle="scoped"`` or chains a
+    ``release_on_gc`` — read from the gate sources, so a new scoped gate
+    is covered without editing this list."""
+    import inspect
+    import re
+
+    import __spark_entry__ as entrymod
+
+    return sorted(
+        name
+        for name, fn in entrymod.queries().items()
+        if re.search(r'lifecycle="scoped"|release_on_gc', inspect.getsource(fn))
+    )
+
+
+def test_scoped_gate_discovery_finds_known_gates():
+    # guards the source scan: an empty parametrization would pass silently
+    assert set(_scoped_gates()) >= {
+        "dedup_minhash_lsh", "dedup_simhash", "dedup_ngram_jaccard",
+        "dedup_containment", "dedup_winnow_pairs", "dedup_fuzzy_pairs",
+        "corpus_fuzzy_join", "dedup_semdedup", "dedup_semdedup_diverse",
+    }
+
+
+@pytest.mark.parametrize("name", _scoped_gates())
+def test_scoped_gate_pin_live_at_action(spark, name):
+    """A gate on the scoped lifecycle must keep its pins registered until
+    its action runs — even after a GC collects every intermediate frame
+    (the derive-then-drop trap documented on release_on_gc) — read the
+    pinned frames from the cache (InMemoryTableScan), and release the pins
+    once the gate's frame is deleted."""
     import gc
 
     from tests.conftest import SF_DIR
@@ -346,16 +378,13 @@ def test_semdedup_gate_pin_survives_projection(spark):
     def rdd_ids():
         return set(jmap().keySet().toArray())
 
-    qs = entrymod.queries()
-    for name in ("dedup_semdedup", "dedup_semdedup_diverse"):
-        before = rdd_ids()
-        frame = qs[name](spark, SF_DIR)
-        gc.collect()  # collects the intermediate `kept` — pin must survive
-        frame.count()
-        pins = rdd_ids() - before
-        assert pins, f"{name}: assignment pin dead before the action"
-        executed = frame._jdf.queryExecution().executedPlan().toString()
-        assert "InMemoryTableScan" in executed
-        del frame
-        gc.collect()
-        assert not (rdd_ids() & pins)
+    before = rdd_ids()
+    frame = entrymod.queries()[name](spark, SF_DIR)
+    gc.collect()
+    frame.count()
+    pins = rdd_ids() - before
+    assert pins, f"{name}: pins dead before the action"
+    assert "InMemoryTableScan" in _executed(frame)
+    del frame
+    gc.collect()
+    assert not (rdd_ids() & pins)

@@ -1484,10 +1484,17 @@ def test_edit_distance_pairs_guards(spark):
     from kartothek_spark.operators.dedup import edit_distance_pairs
 
     df = spark.createDataFrame([(1, "x" * 60), (2, "y")], "doc_id long, k string")
+    jmap = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(jmap().keySet().toArray())
     with pytest.raises(Exception, match="max_len"):
         edit_distance_pairs(df, string_col="k", id_col="doc_id").collect()
+    # the guard raises inside the checkpoint job: the pins must still be
+    # released (no new persisted RDD outlives the failure)
+    assert set(jmap().keySet().toArray()) <= before
     with pytest.raises(ValueError, match="max_dist"):
         edit_distance_pairs(df, max_dist=3, string_col="k", id_col="doc_id")
+    with pytest.raises(ValueError, match="lifecycle"):
+        edit_distance_pairs(df, string_col="k", id_col="doc_id", lifecycle="eager")
 
 
 def test_edit_distance_pairs_unicode(spark):

@@ -344,7 +344,7 @@ def test_edit_distance_pairs_no_cartesian(spark):
     )
     plan = _plan(
         edit_distance_pairs(
-            docs, max_dist=2, string_col="key", id_col="doc_id", eager=False
+            docs, max_dist=2, string_col="key", id_col="doc_id", lifecycle="lazy"
         )
     )
     assert "CartesianProduct" not in plan
@@ -365,7 +365,7 @@ def test_fuzzy_join_no_cartesian(spark):
     plan = _plan(
         fuzzy_join(
             docs, probes, max_dist=2, left_on="key", right_on="qkey",
-            left_id="doc_id", right_id="probe_id", eager=False,
+            left_id="doc_id", right_id="probe_id", lifecycle="lazy",
         )
     )
     assert "CartesianProduct" not in plan
@@ -404,7 +404,7 @@ def test_minhash_cross_pairs_plan_shape(spark):
         F.col("doc_id").alias("bench_id"), F.expr("substring(text, 12)").alias("text")
     )
     plan = _plan(
-        minhash_cross_pairs(docs, bench, threshold=0.35, right_id="bench_id", eager=False)
+        minhash_cross_pairs(docs, bench, threshold=0.35, right_id="bench_id", lifecycle="lazy")
     )
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

@@ -231,13 +231,13 @@ def test_winnow_probe_sql_twin_matches(spark, tmp_path):
 
 
 def test_winnow_dup_pairs_lazy_form_matches_eager(spark):
-    """eager=False must return the SAME pairs as a fully lazy plan —
+    """lifecycle="lazy" must return the SAME pairs as a fully lazy plan —
     no persist, no localCheckpoint (nothing executes at build time), so
     the operator composes into larger lazy pipelines and plan tests."""
     from kartothek_spark.operators.dedup import winnow_dup_pairs
 
     corpus = _with_snips(_docs(spark, n=80))
-    lazy = winnow_dup_pairs(corpus, k=8, w=4, min_shared=12, eager=False)
+    lazy = winnow_dup_pairs(corpus, k=8, w=4, min_shared=12, lifecycle="lazy")
     plan = lazy._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" not in plan  # a checkpoint would surface here
     assert _pairs(lazy) == _pairs(
