@@ -29,11 +29,6 @@ def unquote(value: str) -> str:
     return urllib.parse.unquote(value, errors="surrogateescape")
 
 
-def partition_dirname(keys: list[str], values: list[Any]) -> str:
-    """Hive-style relative dir for one partition value combination."""
-    return "/".join(f"{k}={quote(v)}" for k, v in zip(keys, values))
-
-
 def decode_file_uri_column(col):
     """Runtime file path (``input_file_name()`` / ``_metadata.file_path``)
     → plain filesystem path, as a Spark Column.

@@ -332,6 +332,32 @@ def read_dataset_files(
     return manifest, manifest.files(labels)
 
 
+def _typed(df: DataFrame, manifest: DatasetManifest, columns: Sequence[str] | None) -> DataFrame:
+    """Enforce the manifest types (hive partition columns come back from
+    path inference, e.g. IntegerType — cast to the normalized schema) and
+    the reference's column order guarantee. Hidden partitioning: derived
+    partition columns stay invisible by default (they're storage layout,
+    not data) — ask via ``columns=``."""
+    binkeys = _binary_partition_keys(manifest)
+    by_name = {f.name: f.dataType for f in manifest.schema.fields}
+    if columns is None:
+        columns = [f.name for f in manifest.schema.fields
+                   if f.name not in manifest.partition_transforms]
+    return df.select(*[_retyped_col(c, by_name[c], binkeys) for c in columns])
+
+
+def scan_labels(
+    spark: SparkSession, manifest: DatasetManifest, labels: Sequence[str],
+    columns: Sequence[str] | None = None,
+) -> DataFrame:
+    """Typed scan of exactly ``labels`` of an already-loaded manifest, with
+    no planning and no further manifest load: all labels of a snapshot
+    read as ``read_table(as_of=manifest.version)`` does."""
+    if not labels:
+        return empty_dataframe(spark, manifest, columns)
+    return _typed(_scan_files(spark, manifest, manifest.files(list(labels))), manifest, columns)
+
+
 def _scan_files(spark: SparkSession, manifest: DatasetManifest, files: list[str]) -> DataFrame:
     """Format-dispatched scan of a manifest file list (reference S4 format
     registry, serialization/_generic.py:37-154)."""
@@ -434,32 +460,16 @@ def read_table(
         return empty_dataframe(spark, manifest, columns)
 
     df = _scan_files(spark, manifest, manifest.files(labels))
-    binkeys = _binary_partition_keys(manifest)
-
     if predicates is not None:
         # full DNF pushed to Catalyst: row-group stats pruning + residual
         # filtering happen JVM-side (PushedFilters in the plan)
+        binkeys = _binary_partition_keys(manifest)
         df = df.where(
             predicates_to_column(_translate_binary_predicates(predicates, binkeys))
         )
     if filter_query is not None:
         df = df.where(F.expr(filter_query))
-
-    # enforce manifest types (hive partition columns come back from path
-    # inference, e.g. IntegerType — cast to the normalized schema) and the
-    # reference's column order guarantee
-    by_name = {f.name: f.dataType for f in manifest.schema.fields}
-    if columns is not None:
-        out_cols = list(columns)
-    else:
-        # hidden partitioning: derived partition columns stay invisible by
-        # default (they're storage layout, not data) — ask via columns=
-        out_cols = [
-            f.name
-            for f in manifest.schema.fields
-            if f.name not in manifest.partition_transforms
-        ]
-    df = df.select(*[_retyped_col(c, by_name[c], binkeys) for c in out_cols])
+    df = _typed(df, manifest, columns)
 
     if dispatch_by:
         df = df.repartition(*[F.col(c) for c in dispatch_by])
@@ -542,17 +552,25 @@ def read_dataset_dispatched(
         yield dict(zip(dispatch_by, values)), conj, df
 
 
+def label_changes(old: DatasetManifest, new: DatasetManifest) -> tuple[list[str], list[str]]:
+    """(added_labels, removed_labels) from snapshot ``old`` to ``new``: the
+    one diff of :func:`diff_versions`, :func:`read_changes` and the
+    incremental-sync cursor step."""
+    added = sorted(set(new.partitions) - set(old.partitions))
+    removed = sorted(set(old.partitions) - set(new.partitions))
+    return added, removed
+
+
 def diff_versions(
     root: str, dataset_uuid: str, since: int, until: int | None = None
 ) -> tuple[list[str], list[str]]:
     """(added_labels, removed_labels) between two snapshot versions —
     metadata-only, two manifest reads, no file IO. ``until=None`` means
     the live version."""
-    old = DatasetManifest.load(root, dataset_uuid, version=since)
-    new = DatasetManifest.load(root, dataset_uuid, version=until)
-    added = sorted(set(new.partitions) - set(old.partitions))
-    removed = sorted(set(old.partitions) - set(new.partitions))
-    return added, removed
+    return label_changes(
+        DatasetManifest.load(root, dataset_uuid, version=since),
+        DatasetManifest.load(root, dataset_uuid, version=until),
+    )
 
 
 def read_changes(
@@ -575,20 +593,8 @@ def read_changes(
     the incremental-ingest contract (Delta CDF-style appends) that lets a
     100 TB downstream pipeline reprocess only the day's new data."""
     new = DatasetManifest.load(root, dataset_uuid, version=until)
-    added, _removed = diff_versions(root, dataset_uuid, since, until)
-    if not added:
-        return empty_dataframe(spark, new, columns)
-    df = _scan_files(spark, new, new.files(added))
-    binkeys = _binary_partition_keys(new)
-    by_name = {f.name: f.dataType for f in new.schema.fields}
-    if columns is not None:
-        out_cols = list(columns)
-    else:
-        out_cols = [
-            f.name for f in new.schema.fields
-            if f.name not in new.partition_transforms
-        ]
-    return df.select(*[_retyped_col(c, by_name[c], binkeys) for c in out_cols])
+    old = DatasetManifest.load(root, dataset_uuid, version=since)
+    return scan_labels(spark, new, label_changes(old, new)[0], columns)
 
 
 def read_dataset_as_iterator(

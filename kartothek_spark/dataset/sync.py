@@ -1,27 +1,117 @@
-"""Incremental derived-dataset maintenance over the snapshot history.
+"""Incremental maintenance over the snapshot history: one cursor step.
 
-A CDC-style consumer of :func:`kartothek_spark.dataset.read.read_changes`:
-keep a downstream dataset equal to ``transform(source)`` by reprocessing
-ONLY the rows appended since the last sync — the incremental-ingest shape
-a 100 TB pipeline needs (reprocess the day's new files, not the corpus).
+CDC-style consumers keep datasets equal to a function of a source by
+reprocessing ONLY the rows appended since the last sync (beyond the
+reference; semantics follow Delta CDF consumers). :func:`cursor_step` is
+the protocol of :func:`sync_derived_dataset`, :func:`sync_aggregate_dataset`,
+``operators/pq.py:sync_pq_index`` and
+``operators/dedup_index.py:sync_minhash_index``:
 
-Beyond the reference (single-version manifests can't diff); semantics
-follow Delta CDF consumers: the sync cursor (source version) is recorded
-in the DERIVED dataset's manifest metadata, so the pipeline is restartable
-and exactly-once at the commit level — a crashed sync re-reads the same
-changes and re-appends idempotently only after the failed commit never
-landed.
+* The cursor, the source version last synced, lives in the metadata of
+  the sync's cursor dataset, so a pipeline is restartable.
+* The snapshot is pinned: the source manifest is loaded once, at its live
+  version N, and every source read of the sync (full read, drop check,
+  changes feed, any re-read) comes from it. N is what the cursor records,
+  so an append that commits during a sync is the next sync's change,
+  neither processed twice nor skipped.
+* The cursor commits last: the owned datasets commit in a fixed order
+  with the cursor dataset last. A sync that fails before that commit
+  leaves the cursor in place and the next sync redoes the whole delta; an
+  owned dataset that committed before the failure gets the delta's rows
+  again, which its readers must absorb. An initial build first clears
+  every owned dataset's leftovers, so a torn build never wedges the sync.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
 from typing import Any, Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
 from kartothek_spark.core.manifest import DatasetManifest
+from kartothek_spark.dataset.read import label_changes, scan_labels
 
 _SYNC_KEY = "ktk_sync"
+
+
+@dataclass
+class SyncPass:
+    """One sync's view of its source, pinned at ``source.version``, as
+    handed to a build or incremental body."""
+
+    spark: SparkSession
+    source: DatasetManifest
+    mode: str  # "initial" | "refresh" | "incremental"
+    added: list[str]  # source labels appended since the cursor
+    owned: Sequence[str]  # commit order; the last one carries the cursor
+    meta: dict[str, Any]  # the cursor entry every owned dataset commits
+
+    def full(self) -> DataFrame:
+        """The whole source at the pinned version."""
+        return scan_labels(self.spark, self.source, sorted(self.source.partitions))
+
+    def changes(self) -> DataFrame:
+        """The rows appended between the cursor and the pinned version."""
+        return scan_labels(self.spark, self.source, self.added)
+
+    def commit(self, writes: dict[str, Callable[[dict[str, Any]], Any]]) -> None:
+        """Run each owned dataset's write with the cursor metadata, in
+        ``owned`` order: the cursor dataset commits last."""
+        for uuid in self.owned:
+            writes[uuid](self.meta)
+
+
+def cursor_step(
+    spark: SparkSession,
+    key: str,
+    identity: dict[str, Any],
+    src_root: str,
+    src_uuid: str,
+    dst_root: str,
+    owned: Sequence[str],
+    build: Callable[[SyncPass], Any],
+    incremental: Callable[[SyncPass], Any],
+) -> tuple[str, int, Any]:
+    """Advance a sync whose cursor is the ``key`` metadata entry of
+    ``owned[-1]`` to the source's live version N. ``identity`` (source
+    uuid plus any parameters that shape the output) must match the cursor
+    entry. Runs ``build`` with no cursor dataset (``"initial"``) or when
+    source labels were dropped since the cursor (``"refresh"``: a dropped
+    row cannot be un-derived), else ``incremental``; returns ``(mode, N,
+    body result)``, or ``("noop", N, None)`` when the cursor is at N."""
+    from kartothek_spark.dataset.write import delete_dataset
+
+    src = DatasetManifest.load(src_root, src_uuid)
+    if not src.keep_history:
+        raise ValueError(
+            f"source dataset {src_uuid!r} does not keep history "
+            "(write it with keep_history=True to enable incremental sync)"
+        )
+    target = owned[-1]
+    mode, added, stored = "initial", [], {}
+    if DatasetManifest.exists(dst_root, target):
+        stored = DatasetManifest.load(dst_root, target).metadata.get(key) or {}
+        recorded = {k: stored.get(k) for k in identity}
+        if recorded != identity:
+            raise ValueError(
+                f"dataset {target!r} is not a sync target of {identity} (it "
+                f"records {recorded}); the source and these parameters are "
+                "part of the index identity — rebuild to change them"
+            )
+        cursor = int(stored["src_version"])
+        if cursor == src.version:
+            return "noop", src.version, None
+        old = DatasetManifest.load(src_root, src_uuid, version=cursor)
+        added, removed = label_changes(old, src)
+        mode = "refresh" if removed else "incremental"
+    if mode != "incremental":
+        stored = {}
+        for uuid in owned:
+            delete_dataset(dst_root, uuid)
+    meta = {key: {**stored, **identity, "src_version": src.version}}
+    p = SyncPass(spark, src, mode, added, owned, meta)
+    return mode, src.version, (incremental if mode == "incremental" else build)(p)
 
 
 def sync_derived_dataset(
@@ -51,66 +141,31 @@ def sync_derived_dataset(
     per-row derivation) for incremental == batch equivalence; aggregating
     transforms need the refresh path every time and are better served by
     the streaming operators."""
-    from kartothek_spark.dataset.read import diff_versions, read_changes, read_table
-    from kartothek_spark.dataset.write import (
-        delete_dataset,
-        store_dataframe_as_dataset,
-        update_dataset,
-    )
+    from kartothek_spark.dataset.read import read_table
+    from kartothek_spark.dataset.write import store_dataframe_as_dataset, update_dataset
 
     transform = transform or (lambda df: df)
-    src = DatasetManifest.load(src_root, src_uuid)
-    if not src.keep_history:
-        raise ValueError(
-            f"source dataset {src_uuid!r} does not keep history "
-            "(write it with keep_history=True to enable incremental sync)"
-        )
 
-    cursor: int | None = None
-    if DatasetManifest.exists(dst_root, dst_uuid):
-        dst = DatasetManifest.load(dst_root, dst_uuid)
-        sync_meta = dst.metadata.get(_SYNC_KEY) or {}
-        if sync_meta.get("src_uuid") != src_uuid:
-            raise ValueError(
-                f"dataset {dst_uuid!r} is not a sync target of {src_uuid!r}"
-            )
-        cursor = int(sync_meta["src_version"])
-
-    meta = {_SYNC_KEY: {"src_uuid": src_uuid, "src_version": src.version}}
-
-    if cursor is None:
-        out = transform(read_table(spark, src_root, src_uuid))
-        store_dataframe_as_dataset(
+    def build(p: SyncPass) -> int:
+        out = transform(p.full())
+        p.commit({dst_uuid: lambda meta: store_dataframe_as_dataset(
             spark, out, dst_root, dst_uuid, partition_on=partition_on, metadata=meta
-        )
-        return {"mode": "initial", "src_version": src.version,
-                "rows_processed": _rows(dst_root, dst_uuid, spark)}
+        )})
+        return read_table(spark, dst_root, dst_uuid).count()
 
-    if cursor == src.version:
-        return {"mode": "noop", "src_version": src.version, "rows_processed": 0}
+    def incremental(p: SyncPass) -> int:
+        changes = transform(p.changes())
+        n = changes.count()
+        p.commit({dst_uuid: lambda meta: update_dataset(
+            spark, changes if n else None, dst_root, dst_uuid, metadata=meta
+        )})
+        return n
 
-    _added, removed = diff_versions(src_root, src_uuid, since=cursor)
-    if removed:
-        # dropped source partitions invalidate previously-derived rows —
-        # rebuild from live (see docstring for the delete-heavy alternative)
-        delete_dataset(dst_root, dst_uuid)
-        out = transform(read_table(spark, src_root, src_uuid))
-        store_dataframe_as_dataset(
-            spark, out, dst_root, dst_uuid, partition_on=partition_on, metadata=meta
-        )
-        return {"mode": "refresh", "src_version": src.version,
-                "rows_processed": _rows(dst_root, dst_uuid, spark)}
-
-    changes = transform(read_changes(spark, src_root, src_uuid, since=cursor))
-    n = changes.count()
-    update_dataset(spark, changes if n else None, dst_root, dst_uuid, metadata=meta)
-    return {"mode": "incremental", "src_version": src.version, "rows_processed": n}
-
-
-def _rows(root: str, uuid: str, spark: SparkSession) -> int:
-    from kartothek_spark.dataset.read import read_table
-
-    return read_table(spark, root, uuid).count()
+    mode, version, n = cursor_step(
+        spark, _SYNC_KEY, {"src_uuid": src_uuid}, src_root, src_uuid,
+        dst_root, (dst_uuid,), build, incremental,
+    )
+    return {"mode": mode, "src_version": version, "rows_processed": n or 0}
 
 
 __all__ = ["sync_derived_dataset", "sync_aggregate_dataset"]
@@ -163,12 +218,8 @@ def sync_aggregate_dataset(
     Returns ``{"mode", "src_version", "groups_rewritten"}``."""
     from pyspark.sql import functions as F
 
-    from kartothek_spark.dataset.read import diff_versions, read_changes, read_table
-    from kartothek_spark.dataset.write import (
-        delete_dataset,
-        store_dataframe_as_dataset,
-        update_dataset,
-    )
+    from kartothek_spark.dataset.read import read_table
+    from kartothek_spark.dataset.write import store_dataframe_as_dataset, update_dataset
 
     for _, fn, _ in aggs:
         if fn not in _MERGEABLE:
@@ -199,79 +250,58 @@ def sync_aggregate_dataset(
             ]
         )
 
-    src = DatasetManifest.load(src_root, src_uuid)
-    if not src.keep_history:
-        raise ValueError(
-            f"source dataset {src_uuid!r} does not keep history "
-            "(write it with keep_history=True to enable incremental sync)"
-        )
+    def build(p: SyncPass) -> int:
+        out = _first_agg(p.full())
 
-    cursor: int | None = None
-    if DatasetManifest.exists(dst_root, dst_uuid):
-        dst = DatasetManifest.load(dst_root, dst_uuid)
-        meta = dst.metadata.get(_AGG_SYNC_KEY) or {}
-        if meta.get("src_uuid") != src_uuid:
-            raise ValueError(f"dataset {dst_uuid!r} is not an agg-sync target of {src_uuid!r}")
-        cursor = int(meta["src_version"])
+        def store(meta):
+            try:
+                store_dataframe_as_dataset(
+                    spark, out, dst_root, dst_uuid, partition_on=partition_on, metadata=meta
+                )
+            except ValueError as exc:
+                # translate the write layer's generic null-partition-key
+                # abort into the same actionable message the incremental
+                # path raises
+                if "null values in partition keys" in str(exc):
+                    raise ValueError(
+                        f"sync_aggregate_dataset: NULL value in group column(s) used "
+                        f"as view partition keys {partition_on}; filter or COALESCE "
+                        f"nulls in the source, or choose a non-null partition_on "
+                        f"prefix of group_by"
+                    ) from None
+                raise
 
-    meta = {_AGG_SYNC_KEY: {"src_uuid": src_uuid, "src_version": src.version}}
+        p.commit({dst_uuid: store})
+        return read_table(spark, dst_root, dst_uuid).count()
 
-    def _rebuild(mode: str):
-        if DatasetManifest.exists(dst_root, dst_uuid):
-            delete_dataset(dst_root, dst_uuid)
-        out = _first_agg(read_table(spark, src_root, src_uuid))
-        try:
-            store_dataframe_as_dataset(
-                spark, out, dst_root, dst_uuid, partition_on=partition_on, metadata=meta
+    def incremental(p: SyncPass) -> int:
+        delta = _first_agg(p.changes())
+        scopes = [row.asDict() for row in delta.select(*partition_on).distinct().collect()]
+        # group values become the view's partition keys, which are non-nullable
+        # by engine contract (null-key raise, reference metapartition parity) —
+        # and a (col, '==', None) scope predicate would never match a label.
+        # Fail the sync with an actionable error instead of stalling on the
+        # write's generic null-key abort.
+        null_scopes = [s for s in scopes if any(v is None for v in s.values())]
+        if null_scopes:
+            raise ValueError(
+                f"sync_aggregate_dataset: NULL value in group column(s) used as view "
+                f"partition keys {partition_on} (e.g. {null_scopes[0]}); filter or "
+                f"COALESCE nulls in the source, or choose a non-null partition_on "
+                f"prefix of group_by"
             )
-        except ValueError as exc:
-            # translate the write layer's generic null-partition-key abort
-            # into the same actionable message the incremental path raises
-            if "null values in partition keys" in str(exc):
-                raise ValueError(
-                    f"sync_aggregate_dataset: NULL value in group column(s) used "
-                    f"as view partition keys {partition_on}; filter or COALESCE "
-                    f"nulls in the source, or choose a non-null partition_on "
-                    f"prefix of group_by"
-                ) from None
-            raise
-        n = read_table(spark, dst_root, dst_uuid).count()
-        return {"mode": mode, "src_version": src.version, "groups_rewritten": n}
+        merged = None
+        if scopes:
+            preds = [[(c, "==", scope[c]) for c in partition_on] for scope in scopes]
+            old = read_table(spark, dst_root, dst_uuid, predicates=preds)
+            merged = _merge_agg(old.unionByName(delta)).localCheckpoint(eager=True)
+        p.commit({dst_uuid: lambda meta: update_dataset(
+            spark, merged, dst_root, dst_uuid, delete_scope=scopes, metadata=meta
+        )})
+        return merged.count() if scopes else 0
 
-    if cursor is None:
-        return _rebuild("initial")
-    if cursor == src.version:
-        return {"mode": "noop", "src_version": src.version, "groups_rewritten": 0}
-    _added, removed = diff_versions(src_root, src_uuid, since=cursor)
-    if removed:
-        return _rebuild("refresh")
-
-    delta = _first_agg(read_changes(spark, src_root, src_uuid, since=cursor))
-    scopes = [row.asDict() for row in delta.select(*partition_on).distinct().collect()]
-    # group values become the view's partition keys, which are non-nullable
-    # by engine contract (null-key raise, reference metapartition parity) —
-    # and a (col, '==', None) scope predicate would never match a label.
-    # Fail the sync with an actionable error instead of stalling on the
-    # write's generic null-key abort.
-    null_scopes = [s for s in scopes if any(v is None for v in s.values())]
-    if null_scopes:
-        raise ValueError(
-            f"sync_aggregate_dataset: NULL value in group column(s) used as view "
-            f"partition keys {partition_on} (e.g. {null_scopes[0]}); filter or "
-            f"COALESCE nulls in the source, or choose a non-null partition_on "
-            f"prefix of group_by"
-        )
-    if not scopes:
-        update_dataset(spark, None, dst_root, dst_uuid, metadata=meta)
-        return {"mode": "incremental", "src_version": src.version, "groups_rewritten": 0}
-    preds = [[(c, "==", scope[c]) for c in partition_on] for scope in scopes]
-    old = read_table(spark, dst_root, dst_uuid, predicates=preds)
-    merged = _merge_agg(old.unionByName(delta)).localCheckpoint(eager=True)
-    update_dataset(
-        spark, merged, dst_root, dst_uuid, delete_scope=scopes, metadata=meta
+    mode, version, n = cursor_step(
+        spark, _AGG_SYNC_KEY, {"src_uuid": src_uuid}, src_root, src_uuid,
+        dst_root, (dst_uuid,), build, incremental,
     )
-    return {
-        "mode": "incremental",
-        "src_version": src.version,
-        "groups_rewritten": merged.count(),
-    }
+    return {"mode": mode, "src_version": version, "groups_rewritten": n or 0}

@@ -113,19 +113,6 @@ def word_shingles_sql(expr: str, n: int) -> str:
     )
 
 
-def char_ngrams(col: Column | str, n: int) -> Column:
-    """Distinct character n-grams of the text. The input expression is
-    bound once per row (:func:`bind_once`), so an inlined normalization/
-    tokenize expression is safe — it does NOT re-run per gram position."""
-    c = F.col(col) if isinstance(col, str) else col
-
-    def grams(s):
-        idx = F.sequence(F.lit(1), F.greatest(F.length(s) - n + 1, F.lit(1)))
-        return F.transform(idx, lambda i: F.substring(s, i, n))
-
-    return F.array_distinct(bind_once(c, grams))
-
-
 def char_ngrams_sql(expr: str, n: int) -> str:
     return (
         f"list_distinct(list_transform(range(1, greatest(length(lower({expr})) - {n} + 1, 1) + 1), "

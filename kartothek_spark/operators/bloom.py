@@ -366,25 +366,6 @@ def bloom_contamination_hits(
     return _verify_hits(cand, bench_keys, id_col)
 
 
-def bloom_decontaminate(
-    train: DataFrame,
-    benchmark: DataFrame,
-    n: int = 8,
-    m_bits: int | None = None,
-    k: int = DEFAULT_BLOOM_K,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """The corpus minus contaminated docs, Bloom-prefiltered — value-
-    identical to ``decontaminate`` (shared oracle). Same no-forced-
-    broadcast stance as the exact twin: the hit-id list is normally tiny
-    and AQE broadcasts it at runtime."""
-    hits = bloom_contamination_hits(
-        train, benchmark, n, m_bits, k, text_col, id_col
-    ).select(id_col)
-    return train.join(hits, id_col, "left_anti")
-
-
 # --- persisted index ---------------------------------------------------------
 
 
@@ -654,7 +635,6 @@ __all__ = [
     "bloom_member_expr",
     "bloom_member_scalar",
     "bloom_contamination_hits",
-    "bloom_decontaminate",
     "build_bloom_index",
     "sync_bloom_index",
     "bloom_contamination_hits_indexed",

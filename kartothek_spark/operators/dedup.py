@@ -33,7 +33,6 @@ from kartothek_spark.functions.hashing import (
     shingles_from_tokens,
     tokens,
     tokens_sql,
-    word_shingles,
     word_shingles_sql,
 )
 from kartothek_spark.operators.text import fingerprint, fingerprint_sql
@@ -109,22 +108,6 @@ def _perm_key(i: int) -> int:
     import hashlib
 
     return int(hashlib.md5(f"perm:{i}".encode()).hexdigest()[:15], 16)
-
-
-def minhash_signature(col, num_hashes: int = MINHASH_NUM_HASHES, shingle_words: int = MINHASH_SHINGLE_WORDS):
-    """Array of minhashes: sig[i] = min over shingles of (h60(s) XOR K_i),
-    where K_i is a fixed 60-bit key (XOR by a constant is a permutation of
-    the hash space, so the family is a valid LSH for Jaccard). Column-in /
-    Column-out convenience form; :func:`minhash_lsh_pairs` uses the
-    aggregation form instead so each shingle is md5-hashed exactly once."""
-    sh = word_shingles(col, shingle_words)
-    hashes = F.transform(sh, lambda s: h60(s))
-    return F.array(
-        *[
-            F.array_min(F.transform(hashes, lambda h: h.bitwiseXOR(F.lit(_perm_key(j)))))
-            for j in range(num_hashes)
-        ]
-    )
 
 
 def hashed_shingles(toks: F.Column, n: int) -> F.Column:

@@ -45,7 +45,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kartothek_spark.core.manifest import DatasetManifest
 from kartothek_spark.functions.hashing import tokens
 from kartothek_spark.operators._util import scale_out
 from kartothek_spark.operators.dedup import (
@@ -144,20 +143,16 @@ def sync_minhash_index(
     and the full live pair set is re-emitted (``refresh`` — consumers
     should replace, not append, their derived duplicate table; same
     contract as :func:`~kartothek_spark.dataset.sync.sync_derived_dataset`).
-    """
-    from kartothek_spark.dataset.read import diff_versions, read_changes, read_table
-    from kartothek_spark.dataset.write import (
-        delete_dataset,
-        store_dataframe_as_dataset,
-        update_dataset,
-    )
 
-    src = DatasetManifest.load(corpus_root, corpus_uuid)
-    if not src.keep_history:
-        raise ValueError(
-            f"corpus {corpus_uuid!r} does not keep history "
-            "(write it with keep_history=True to enable incremental dedup)"
-        )
+    The protocol is :func:`kartothek_spark.dataset.sync.cursor_step`:
+    corpus reads come from the snapshot the cursor records, and
+    ``<uuid>__ckpairs`` commits before the cursor-carrying ``<uuid>``. A
+    sync that fails between the two raises and keeps the cursor, so the
+    retry emits the whole delta's pairs; the key pairs it re-sends to
+    ``__ckpairs`` are value-neutral (inherited pairs and the returned
+    pairs are ``distinct()``)."""
+    from kartothek_spark.dataset.sync import cursor_step
+
     params = {
         "src_uuid": corpus_uuid,
         "threshold": threshold,
@@ -165,38 +160,34 @@ def sync_minhash_index(
         "bands": bands,
         "shingle_words": MINHASH_SHINGLE_WORDS,
     }
+
+    def advance(p) -> DataFrame:
+        return _advance(p, index_root, index_uuid, text_col, id_col, threshold, num_hashes, bands)
+
+    _mode, _version, pairs = cursor_step(
+        spark, _INDEX_KEY, params, corpus_root, corpus_uuid, index_root,
+        (_pairs_suffix(index_uuid), index_uuid), advance, advance,
+    )
+    return pairs if pairs is not None else spark.createDataFrame([], _PAIR_SCHEMA)
+
+
+def _advance(p, index_root, index_uuid, text_col, id_col, threshold, num_hashes, bands):
+    """The sync's build and incremental body (a
+    :class:`~kartothek_spark.dataset.sync.SyncPass` ``p``)."""
+    from kartothek_spark.dataset.read import read_table
+    from kartothek_spark.dataset.write import store_dataframe_as_dataset, update_dataset
+
+    spark = p.spark
     pairs_uuid = _pairs_suffix(index_uuid)
-
-    cursor: int | None = None
-    if DatasetManifest.exists(index_root, index_uuid):
-        idx_manifest = DatasetManifest.load(index_root, index_uuid)
-        meta = idx_manifest.metadata.get(_INDEX_KEY) or {}
-        stored = {k: meta.get(k) for k in params}
-        if stored != params:
-            raise ValueError(
-                f"index {index_uuid!r} was built with {stored}; "
-                f"these parameters are part of the index identity — "
-                f"rebuild to change them (got {params})"
-            )
-        cursor = int(meta["src_version"])
-        if cursor == src.version:
-            return spark.createDataFrame([], _PAIR_SCHEMA)
-        _added, removed = diff_versions(corpus_root, corpus_uuid, since=cursor)
-        if removed:
-            delete_dataset(index_root, index_uuid)
-            delete_dataset(index_root, pairs_uuid)
-            cursor = None  # fall through to the full rebuild
-
-    meta = {_INDEX_KEY: {**params, "src_version": src.version}}
-
-    if cursor is None:
-        new_docs = read_table(spark, corpus_root, corpus_uuid)
-        old_rows = None
-        old_ckpairs = None
-    else:
-        new_docs = read_changes(spark, corpus_root, corpus_uuid, since=cursor)
+    incremental = p.mode == "incremental"
+    if incremental:
+        new_docs = p.changes()
         old_rows = read_table(spark, index_root, index_uuid)
         old_ckpairs = read_table(spark, index_root, pairs_uuid)
+    else:
+        new_docs = p.full()
+        old_rows = None
+        old_ckpairs = None
 
     new_base = _shingled(scale_out(new_docs), text_col, id_col).persist()
     new_members = new_base.select("__id", "__ck")
@@ -216,7 +207,6 @@ def sync_minhash_index(
         all_members = old_members.unionByName(new_members)
         all_sigs = old_sigs.unionByName(fresh_sigs)
     else:
-        old_members = None
         fresh_sigs = new_sigs.persist()
         all_members = new_members
         all_sigs = fresh_sigs
@@ -245,8 +235,8 @@ def sync_minhash_index(
     # representative = min doc id per ck; its shingle array is re-derived
     # from the corpus via a candidate-pruned semi-join scan (new-ck reps
     # short-circuit through new_reps, no corpus read for them)
-    if cursor is None:
-        # initial build: every candidate rep is new — no corpus refetch
+    if not incremental:
+        # build: every candidate rep is new — no corpus refetch
         shingle_sets = new_reps.select("__ck", "__sh")
     else:
         all_reps = all_members.groupBy("__ck").agg(F.min("__id").alias("__rid"))
@@ -260,9 +250,8 @@ def sync_minhash_index(
         missing_ids = need.join(new_reps.select("__ck"), "__ck", "left_anti").select(
             F.col("__rid").alias(id_col)
         )
-        corpus_live = read_table(spark, corpus_root, corpus_uuid)
         refetched = _shingled(
-            corpus_live.join(missing_ids, id_col, "left_semi"), text_col, id_col
+            p.full().join(missing_ids, id_col, "left_semi"), text_col, id_col
         ).select("__ck", "__sh")
         shingle_sets = have_new.unionByName(refetched)
 
@@ -340,34 +329,25 @@ def sync_minhash_index(
 
     pairs = cross.unionByName(intra).distinct().localCheckpoint(eager=True)
 
-    # ---- commit: per-doc rows + key pairs + cursor, pairs already safe ----
+    # ---- commit: key pairs, then per-doc rows + cursor; pairs already safe ----
     # materialized once: the signature aggregation (one md5 per shingle)
     # otherwise re-runs for the row count AND again for the write
     new_rows = new_members.join(new_sigs, "__ck").select(
         F.col("__id").alias("doc_id"), F.col("__ck").alias("ck"), "sig"
     ).localCheckpoint(eager=True)
-    if cursor is None:
-        store_dataframe_as_dataset(
-            spark, new_rows, index_root, index_uuid, metadata=meta
-        )
-        store_dataframe_as_dataset(
-            spark,
-            fresh_ckpairs,
-            index_root,
-            pairs_uuid,
-            metadata=meta,
-        )
-    else:
-        n_new = new_rows.count()
-        update_dataset(spark, new_rows if n_new else None, index_root, index_uuid, metadata=meta)
-        n_pairs = fresh_ckpairs.count()
-        update_dataset(
-            spark, fresh_ckpairs if n_pairs else None, index_root, pairs_uuid, metadata=meta
-        )
-
+    # everything the commits and the caller read is checkpointed now
     new_base.unpersist()
     new_reps.unpersist()
     fresh_sigs.unpersist()
+
+    def land(uuid: str, df: DataFrame):
+        if incremental:
+            return lambda meta: update_dataset(
+                spark, df if df.count() else None, index_root, uuid, metadata=meta
+            )
+        return lambda meta: store_dataframe_as_dataset(spark, df, index_root, uuid, metadata=meta)
+
+    p.commit({pairs_uuid: land(pairs_uuid, fresh_ckpairs), index_uuid: land(index_uuid, new_rows)})
     return pairs
 
 

@@ -371,6 +371,19 @@ def build_pq_index(
     The trained quantizers (coarse centroids + per-subspace codebooks)
     ride in the manifest metadata — one load, no side files. Returns the
     committed :class:`DatasetManifest`."""
+    return _store_index(
+        spark, df, root, index_uuid, dim, n_centroids, m, ksub, id_col, vec_col,
+        seed, sample_target, {},
+    )
+
+
+def _store_index(
+    spark, df, root, index_uuid, dim, n_centroids, m, ksub, id_col, vec_col,
+    seed, sample_target, meta,
+):
+    """Train the quantizers on ``df``, encode it and store the
+    cell-partitioned index; the ``pq`` metadata entry holds the
+    quantizers next to ``meta`` (a sync's cursor entry)."""
     from kartothek_spark.dataset.write import store_dataframe_as_dataset
 
     coarse, codebooks = train_pq(
@@ -378,20 +391,20 @@ def build_pq_index(
         vec_col=vec_col, seed=seed, sample_target=sample_target,
     )
     codes = encode_pq(df, coarse, codebooks, id_col=id_col, vec_col=vec_col)
-    meta = {
-        _PQ_META_KEY: {
-            "dim": dim,
-            "n_centroids": n_centroids,
-            "m": m,
-            "ksub": ksub,
-            "coarse": [[float(x) for x in row] for row in coarse],
-            "codebooks": [
-                [[float(x) for x in row] for row in book] for book in codebooks
-            ],
-        }
+    entry = {
+        "dim": dim,
+        "n_centroids": n_centroids,
+        "m": m,
+        "ksub": ksub,
+        **meta,
+        "coarse": [[float(x) for x in row] for row in coarse],
+        "codebooks": [
+            [[float(x) for x in row] for row in book] for book in codebooks
+        ],
     }
     return store_dataframe_as_dataset(
-        spark, codes, root, index_uuid, partition_on=["cell"], metadata=meta
+        spark, codes, root, index_uuid, partition_on=["cell"],
+        metadata={_PQ_META_KEY: entry},
     )
 
 
@@ -452,6 +465,7 @@ __all__ = [
     "ivfpq_topk",
     "build_pq_index",
     "search_pq_index",
+    "sync_pq_index",
     "_np_kmeans",
 ]
 
@@ -480,21 +494,16 @@ def sync_pq_index(
     stay comparable with old ones). Per-sync cost is O(new rows): encode
     is one mapInPandas pass over the appended files, and the commit
     appends into the existing cell partitions. Dropped corpus partitions
-    force a rebuild (codes for removed rows cannot be un-appended row-wise
-    — same contract as the dedup index). Returns ``{"mode",
-    "src_version", "rows_indexed"}``."""
+    force a rebuild (``mode="refresh"``: codes for removed rows cannot be
+    un-appended row-wise — same contract as the dedup index). The cursor
+    protocol is :func:`kartothek_spark.dataset.sync.cursor_step`. Returns
+    ``{"mode", "src_version", "rows_indexed"}``."""
     import numpy as np
 
-    from kartothek_spark.core.manifest import DatasetManifest
-    from kartothek_spark.dataset.read import diff_versions, read_changes, read_table
-    from kartothek_spark.dataset.write import delete_dataset, update_dataset
+    from kartothek_spark.dataset.read import read_table
+    from kartothek_spark.dataset.sync import cursor_step
+    from kartothek_spark.dataset.write import update_dataset
 
-    src = DatasetManifest.load(corpus_root, corpus_uuid)
-    if not src.keep_history:
-        raise ValueError(
-            f"corpus {corpus_uuid!r} does not keep history "
-            "(write it with keep_history=True to enable incremental indexing)"
-        )
     params = {
         "src_uuid": corpus_uuid,
         "dim": dim,
@@ -503,56 +512,26 @@ def sync_pq_index(
         "ksub": ksub,
     }
 
-    cursor: int | None = None
-    if DatasetManifest.exists(index_root, index_uuid):
-        idx = DatasetManifest.load(index_root, index_uuid)
-        meta = idx.metadata.get(_PQ_META_KEY) or {}
-        stored = {k: meta.get(k) for k in params}
-        if stored != params:
-            raise ValueError(
-                f"index {index_uuid!r} was built with {stored}; quantizer "
-                f"parameters are part of the index identity — rebuild to "
-                f"change them (got {params})"
-            )
-        cursor = int(meta["src_version"])
-        if cursor == src.version:
-            return {"mode": "noop", "src_version": src.version, "rows_indexed": 0}
-        _added, removed = diff_versions(corpus_root, corpus_uuid, since=cursor)
-        if removed:
-            delete_dataset(index_root, index_uuid)
-            cursor = None
+    def build(p):
+        p.commit({index_uuid: lambda meta: _store_index(
+            spark, p.full(), index_root, index_uuid, dim, n_centroids, m, ksub,
+            id_col, vec_col, seed, sample_target, meta[_PQ_META_KEY],
+        )})
+        return read_table(spark, index_root, index_uuid).count()
 
-    if cursor is None:
-        corpus = read_table(spark, corpus_root, corpus_uuid)
-        coarse, codebooks = train_pq(
-            spark, corpus, dim, n_centroids=n_centroids, m=m, ksub=ksub,
-            vec_col=vec_col, seed=seed, sample_target=sample_target,
-        )
-        codes = encode_pq(corpus, coarse, codebooks, id_col=id_col, vec_col=vec_col)
-        meta = {
-            _PQ_META_KEY: {
-                **params,
-                "src_version": src.version,
-                "coarse": [[float(x) for x in row] for row in coarse],
-                "codebooks": [
-                    [[float(x) for x in row] for row in book] for book in codebooks
-                ],
-            }
-        }
-        from kartothek_spark.dataset.write import store_dataframe_as_dataset
+    def incremental(p):
+        entry = p.meta[_PQ_META_KEY]
+        coarse = np.asarray(entry["coarse"], dtype="float64")
+        codebooks = np.asarray(entry["codebooks"], dtype="float64")
+        codes = encode_pq(p.changes(), coarse, codebooks, id_col=id_col, vec_col=vec_col)
+        n = codes.count()
+        p.commit({index_uuid: lambda meta: update_dataset(
+            spark, codes if n else None, index_root, index_uuid, metadata=meta
+        )})
+        return n
 
-        store_dataframe_as_dataset(
-            spark, codes, index_root, index_uuid, partition_on=["cell"], metadata=meta
-        )
-        n = read_table(spark, index_root, index_uuid).count()
-        return {"mode": "initial", "src_version": src.version, "rows_indexed": n}
-
-    idx_meta = DatasetManifest.load(index_root, index_uuid).metadata[_PQ_META_KEY]
-    coarse = np.asarray(idx_meta["coarse"], dtype="float64")
-    codebooks = np.asarray(idx_meta["codebooks"], dtype="float64")
-    new_rows = read_changes(spark, corpus_root, corpus_uuid, since=cursor)
-    codes = encode_pq(new_rows, coarse, codebooks, id_col=id_col, vec_col=vec_col)
-    n = codes.count()
-    meta = {_PQ_META_KEY: {**idx_meta, "src_version": src.version}}
-    update_dataset(spark, codes if n else None, index_root, index_uuid, metadata=meta)
-    return {"mode": "incremental", "src_version": src.version, "rows_indexed": n}
+    mode, version, n = cursor_step(
+        spark, _PQ_META_KEY, params, corpus_root, corpus_uuid, index_root,
+        (index_uuid,), build, incremental,
+    )
+    return {"mode": mode, "src_version": version, "rows_indexed": n or 0}

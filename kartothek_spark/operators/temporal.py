@@ -541,32 +541,6 @@ def cohort_retention(
     )
 
 
-def cohort_retention_sql(
-    table: str,
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    period: str = "week",
-) -> str:
-    """DuckDB twin of :func:`cohort_retention` (value-exact; both engines
-    truncate weeks to Monday 00:00)."""
-    seconds = {"week": 7 * 86400, "day": 86400}[period]
-    return f"""
-WITH activity AS (
-  SELECT DISTINCT {user_col} AS u, date_trunc('{period}', {ts_col}) AS activity_start
-  FROM {table}
-), cohorts AS (
-  SELECT u, min(activity_start) AS cohort_start FROM activity GROUP BY u
-)
-SELECT a.cohort_start, a.activity_start,
-       CAST((epoch(a.activity_start) - epoch(a.cohort_start)) // {seconds} AS BIGINT)
-         AS period_index,
-       CAST(count(DISTINCT a.u) AS BIGINT) AS n_users
-FROM (SELECT activity.*, cohorts.cohort_start
-      FROM activity JOIN cohorts USING (u)) a
-GROUP BY 1, 2
-"""
-
-
 def resample_grid(
     events: DataFrame,
     interval_seconds: int,

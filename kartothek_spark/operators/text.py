@@ -149,11 +149,6 @@ def quality_features_sql(expr: str) -> dict[str, str]:
     }
 
 
-def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    feats = quality_features(text_col)
-    return df.select(F.col(id_col), *[c.alias(n) for n, c in feats.items()])
-
-
 # unicode punctuation folded to ASCII by normalize_text; FROM and TO are
 # equal-length codepoint maps (translate semantics, identical in DuckDB):
 # curly quotes → straight, en/em dash → '-', NBSP → space, ellipsis → '.'

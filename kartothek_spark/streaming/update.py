@@ -433,12 +433,13 @@ def stream_dedup_index(
 
     Consistency: the corpus commit is the transaction of record and is
     idempotent — a batch retried after its corpus commit landed is detected
-    via the ``last_stream_batch`` manifest stamp and skips the re-append,
-    so the subsequent index sync sees no new files and emits zero pairs
-    (exactly-once end to end). A crash BETWEEN corpus commit and pairs
-    append loses that batch's pair rows, which a restartable pipeline
-    repairs by rebuilding the index (delete index + pairs datasets, one
-    catch-up sync). Returns the StreamingQuery."""
+    via the ``last_stream_batch`` stamp and skips the re-append. The index
+    sync commits its cursor last (``dataset/sync.py``), so a batch that
+    failed before that commit gets all its pairs from the retried sync. A
+    crash AFTER the cursor commit but before the pairs append loses the
+    batch's pair rows (the retried sync emits none); rebuild the index to
+    repair (delete index + pairs datasets, one catch-up sync). Returns the
+    StreamingQuery."""
     from kartothek_spark.operators.dedup_index import sync_minhash_index
 
     spark = stream_df.sparkSession

@@ -241,3 +241,51 @@ def test_fuzzy_index_sync_and_guards(spark, tmp_path):
         search_fuzzy_index(
             spark, root, "fx", probes, probe_key="q", probe_id="pid", corpus=corpus
         )
+
+
+
+def test_torn_sync_reemits_on_retry(spark, tmp_root, monkeypatch):
+    """The second of a sync's two index commits fails once, after its
+    files were written: first during the initial build, then during an
+    incremental sync. The index (which carries the cursor) commits last,
+    so the cursor stays where it was and each retry emits its whole
+    delta's pairs: the union of emitted pairs equals the batch operator,
+    and the index holds each document once. A torn initial build is
+    cleared before the retry rebuilds. A retry re-sends the key pairs the
+    failed sync already committed to ``__ckpairs``; that is value-neutral,
+    because the inherited-pair expansion and the returned pairs both
+    apply ``distinct()``."""
+    from kartothek_spark.core.manifest import DatasetManifest
+
+    docs = _docs(spark).where(F.col("doc_id") < 300)
+    emitted = set()
+    real_commit = DatasetManifest.commit
+
+    def torn_then_retried_sync():
+        commits = []
+
+        def flaky_commit(self, *args, **kwargs):
+            commits.append(self.dataset_uuid)
+            if len(commits) == 2:
+                raise RuntimeError("injected commit failure")
+            return real_commit(self, *args, **kwargs)
+
+        monkeypatch.setattr(DatasetManifest, "commit", flaky_commit)
+        with pytest.raises(RuntimeError, match="injected"):
+            sync_minhash_index(spark, tmp_root, "corpus", tmp_root, "mh_idx", threshold=THRESHOLD)
+        monkeypatch.undo()
+        assert len(commits) == 2
+        emitted.update(_pairs_set(sync_minhash_index(
+            spark, tmp_root, "corpus", tmp_root, "mh_idx", threshold=THRESHOLD
+        )))
+
+    store_dataframe_as_dataset(
+        spark, docs.where(F.col("doc_id") % 2 == 0), tmp_root, "corpus", keep_history=True
+    )
+    torn_then_retried_sync()
+    update_dataset(spark, docs.where(F.col("doc_id") % 2 == 1), tmp_root, "corpus")
+    torn_then_retried_sync()
+
+    want = _pairs_set(minhash_lsh_pairs(docs, threshold=THRESHOLD))
+    assert want and emitted == want
+    assert read_table(spark, tmp_root, "mh_idx").count() == docs.count()

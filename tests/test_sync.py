@@ -308,3 +308,71 @@ def test_stream_fuzzy_index_matches_batch(spark, tmp_path):
         ).collect()
     )
     assert got == want and got
+
+
+def _sorted_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _pin_derived(spark, root):
+    """(sync, destination rows, rows recomputed from the source)"""
+    return (
+        lambda: sync_derived_dataset(spark, root, "src", root, "dst", _transform),
+        lambda: _sorted_rows(read_table(spark, root, "dst")),
+        lambda: _sorted_rows(_transform(read_table(spark, root, "src"))),
+    )
+
+
+def _pin_aggregate(spark, root):
+    from kartothek_spark.dataset.sync import sync_aggregate_dataset
+
+    aggs = [("n", "count", "*"), ("keys", "sum", "c_custkey")]
+    return (
+        lambda: sync_aggregate_dataset(
+            spark, root, "src", root, "view", group_by=["c_mktsegment"], aggs=aggs
+        ),
+        lambda: _sorted_rows(
+            read_table(spark, root, "view").select("c_mktsegment", "n", "keys")
+        ),
+        lambda: _sorted_rows(
+            read_table(spark, root, "src").groupBy("c_mktsegment").agg(
+                F.count("*").alias("n"), F.sum("c_custkey").alias("keys")
+            )
+        ),
+    )
+
+
+@pytest.mark.parametrize("case", [_pin_derived, _pin_aggregate], ids=["derived", "aggregate"])
+def test_sync_pins_source_snapshot(spark, tmp_root, monkeypatch, case):
+    """An append that commits right after a sync loaded the source manifest
+    belongs to the NEXT sync: every read of a sync comes from the snapshot
+    whose version its cursor records. A sync that read the live source
+    instead would process the append now and again next time, so after
+    the next sync the destination would differ from a full recompute."""
+    from kartothek_spark.core.manifest import DatasetManifest
+
+    sync, got, recomputed = case(spark, tmp_root)
+    batch = [_customer(spark).where(F.col("c_custkey") % 3 == i) for i in range(3)]
+    store_dataframe_as_dataset(spark, batch[0], tmp_root, "src", keep_history=True)
+    assert sync()["mode"] == "initial"
+    update_dataset(spark, batch[1], tmp_root, "src")
+
+    real_load = DatasetManifest.load.__func__
+    loaded = []
+
+    def load(cls, root, uuid, version=None):
+        m = real_load(cls, root, uuid, version)
+        if not loaded and (root, uuid, version) == (tmp_root, "src", None):
+            loaded.append(m.version)
+            update_dataset(spark, batch[2], tmp_root, "src")
+        return m
+
+    monkeypatch.setattr(DatasetManifest, "load", classmethod(load))
+    first = sync()
+    monkeypatch.undo()
+    # the append landed between the sync's source load and its reads
+    assert loaded == [first["src_version"]]
+    assert DatasetManifest.load(tmp_root, "src").version == loaded[0] + 1
+    assert first["mode"] == "incremental"
+    assert sync()["mode"] == "incremental"
+    assert got() == recomputed()
