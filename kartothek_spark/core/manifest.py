@@ -33,7 +33,7 @@ from typing import Any
 
 from pyspark.sql import types as T
 
-from kartothek_spark.core.urlencode import parse_partition_values
+from kartothek_spark.core.urlencode import parse_partition_values, unquote
 
 METADATA_VERSION = 4
 TABLE = "table"  # single-table datasets (multi-table is deprecated upstream)
@@ -165,57 +165,145 @@ _FILE_STORE = _FileStore()
 _SAFE_SEGMENT = None  # compiled lazily (regex import cost at module load)
 
 
+_MISSING = object()
+_SCANS_BEFORE_SET = 128
+
+
+def _plain(entry) -> bool:
+    """True for the dominant entry shape, exactly ``{"file": ...}``."""
+    return isinstance(entry, dict) and len(entry) == 1 and "file" in entry
+
+
 class _SidecarPartitions(MutableMapping):
     """Partition map backed lazily by the parquet sidecar's arrow columns
-    (fast-path sidecars only: every entry is a pure ``{"file": ...}``).
+    (fast-path sidecars only: every entry is a pure ``{"file": ...}``),
+    plus an add/remove overlay.
 
-    Planning touches LABELS, not entries — ``query()`` iterates labels,
-    ``dispatch_labels`` sorts/intersects them — so load defers the
-    expensive part: at 1M partitions, building the inner dicts costs
-    ~2 s of driver time while the parquet decode itself is ~0.2 s
-    (measured; see BENCH_NOTES ``manifest_plan_1m``). Iteration, ``len``
-    and membership never materialize; the first ENTRY access (read or
-    write) builds the full dict once and delegates from then on, so
-    mutation semantics — including callers that mutate a returned entry
-    in place — are exactly a dict's."""
+    Planning touches LABELS, not entries — ``query()`` evaluates the arrow
+    label column, ``dispatch_labels`` sorts/intersects the result — so
+    load defers the expensive part: at 1M partitions, building the inner
+    dicts costs ~2 s of driver time while the parquet decode itself is
+    ~0.2 s (see BENCH_NOTES ``manifest_plan_1m``). The base columns never
+    change. Plain appends (a new label with a ``{"file": ...}`` entry),
+    deletes and ``pop`` go to an added dict and a removed set; iteration,
+    ``len``, membership, ``get_file``, ``==`` and the sidecar rewrite all
+    see the overlay without building the entry dicts, in a dict's order
+    (base minus removed, then added). Entry reads, overwrites of a base
+    label and non-plain added entries build the full dict once and
+    delegate from then on, so mutation semantics — including callers
+    that mutate a returned entry in place — are exactly a dict's."""
 
     __slots__ = (
-        "_labels_arr", "_files_arr", "_labels", "_set", "_dict", "_files",
-        "source_path",
+        "_labels_arr", "_files_arr", "_labels", "_set", "_files", "_dict",
+        "_added", "_removed", "_keep", "_view", "_decoded", "_scans", "source_path",
     )
 
     def __init__(self, labels_arr, files_arr, source_path: str | None = None):
         self._labels_arr = labels_arr  # pyarrow (Chunked)Array[string]
         self._files_arr = files_arr
-        self._labels: list | None = None  # built on first iteration
-        self._set: set | None = None  # built on first membership test
+        self._labels: list | None = None  # base labels, built on first use
+        self._set: set | None = None  # base label set
+        self._scans = 0  # membership lookups answered by a column scan
+        self._files: dict | None = None  # base label -> file
         self._dict: dict | None = None  # built on first entry access
-        self._files: dict | None = None  # flat label->file, read-only path
+        self._added: dict = {}  # new label -> entry, after the base
+        self._removed: set = set()  # deleted base labels
+        self._keep = None  # bool mask of base labels not removed
+        self._view: list | None = None  # current labels, while overlaid
+        # typed key columns of the BASE labels, per decode signature (see
+        # DatasetManifest.query); the base never changes, so never stale
+        self._decoded: dict = {}
         # sidecar file these columns were decoded from: while the map is
-        # unmaterialized it is PROVABLY byte-identical to that file
-        # (entry mutation requires materialization), so a metadata-only
-        # commit can copy the file instead of re-encoding 1M rows
+        # neither materialized nor overlaid it is PROVABLY byte-identical
+        # to that file, so a metadata-only commit can copy the file
+        # instead of re-encoding 1M rows
         self.source_path = source_path
+
+    # -- base views ----------------------------------------------------------
+    def _base_labels(self) -> list:
+        if self._labels is None:
+            self._labels = self._labels_arr.to_pylist()
+        return self._labels
+
+    def _base_has(self, label) -> bool:
+        """``label`` is a base label the overlay has not removed. The first
+        lookups scan the arrow column (~1 ms at 200k labels); the set,
+        which costs ~0.2 s to build there, only once lookups add up."""
+        if label in self._removed:
+            return False
+        if self._set is None:
+            self._scans += 1
+            if self._scans <= _SCANS_BEFORE_SET:
+                import pyarrow.compute as pc
+
+                return pc.index(self._labels_arr, label).as_py() >= 0
+            self._set = set(self._base_labels())
+        return label in self._set
+
+    def _keep_mask(self):
+        """numpy mask of the base labels still present (None: all are)."""
+        if not self._removed:
+            return None
+        if self._keep is None:
+            import pyarrow as pa
+            import pyarrow.compute as pc
+
+            gone = pc.is_in(self._labels_arr, value_set=pa.array(list(self._removed), pa.string()))
+            self._keep = ~gone.to_numpy(zero_copy_only=False)
+        return self._keep
+
+    def _changed(self) -> None:
+        self._keep = None
+        self._view = None
+        self.source_path = None  # no longer the source file's exact content
 
     # -- lazy accessors ------------------------------------------------------
     def label_list(self) -> list:
         if self._dict is not None:
             return list(self._dict)
-        if self._labels is None:
-            self._labels = self._labels_arr.to_pylist()
-        return self._labels
+        if not (self._added or self._removed):
+            return self._base_labels()
+        if self._view is None:
+            import pyarrow as pa
 
-    def arrow_labels(self):
-        """Label column as a pyarrow array while still lazy, else None —
-        ``DatasetManifest.query``'s vectorized fast path."""
-        return None if self._dict is not None else self._labels_arr
+            keep = self._keep_mask()
+            base = (self._base_labels() if keep is None
+                    else self._labels_arr.filter(pa.array(keep)).to_pylist())
+            self._view = base + list(self._added)
+        return self._view
+
+    def label_parts(self) -> list:
+        """``(labels, live mask | None, decode cache | None)`` per label
+        column, in iteration order — what ``DatasetManifest.query``
+        evaluates."""
+        import pyarrow as pa
+
+        if self._dict is not None:
+            return [(pa.array(list(self._dict), pa.string()), None, None)]
+        parts = [(self._labels_arr, self._keep_mask(), self._decoded)]
+        if self._added:
+            parts.append((pa.array(list(self._added), pa.string()), None, None))
+        return parts
 
     def arrow_columns(self):
-        """(labels, files) arrow arrays while still lazy, else None —
+        """(labels, files) arrow arrays of the current content while every
+        entry is plain and the map is not materialized, else None —
         ``_write_partitions_sidecar``'s rewrite fast path."""
-        if self._dict is not None:
+        if self._dict is not None or not all(map(_plain, self._added.values())):
             return None
-        return self._labels_arr, self._files_arr
+        if not (self._added or self._removed):
+            return self._labels_arr, self._files_arr
+        import pyarrow as pa
+
+        keep = self._keep_mask()
+        cols = []
+        for base, new in ((self._labels_arr, list(self._added)),
+                          (self._files_arr, [e["file"] for e in self._added.values()])):
+            if keep is not None:
+                base = base.filter(pa.array(keep))
+            chunks = getattr(base, "chunks", [base])
+            cols.append(pa.concat_arrays([*chunks, pa.array(new, pa.string())]))
+        return tuple(cols)
 
     def get_file(self, label: str) -> str | None:
         """One label's file WITHOUT materializing the inner dicts — the
@@ -226,24 +314,37 @@ class _SidecarPartitions(MutableMapping):
         any mutation path has materialized it."""
         if self._dict is not None:
             entry = self._dict.get(label)
-            return None if entry is None else entry.get("file")
+        else:
+            entry = self._added.get(label)
+            if entry is None:
+                return self._base_files().get(label) if label not in self._removed else None
+        return None if entry is None else entry.get("file")
+
+    def _base_files(self) -> dict:
         if self._files is None:
-            self._files = dict(zip(self.label_list(), self._files_arr.to_pylist()))
-        return self._files.get(label)
+            self._files = dict(zip(self._base_labels(), self._files_arr.to_pylist()))
+        return self._files
 
     def _materialize(self) -> dict:
         if self._dict is None:
-            labels = self.label_list()
             files = self._files_arr.to_pylist()
-            self._dict = {lbl: {"file": f} for lbl, f in zip(labels, files)}
-            self._labels = None
-            self._set = None
-            self._files = None  # entries are now mutable; flat view is stale
+            removed = self._removed
+            self._dict = {
+                lbl: {"file": f}
+                for lbl, f in zip(self._base_labels(), files)
+                if not removed or lbl not in removed
+            }
+            self._dict.update(self._added)
+            self._labels = self._set = self._files = self._view = self._keep = None
+            self._added, self._removed = {}, set()
+            self._decoded = {}
         return self._dict
 
     # -- read-only views that stay lazy --------------------------------------
     def __len__(self) -> int:
-        return len(self._dict) if self._dict is not None else len(self._labels_arr)
+        if self._dict is not None:
+            return len(self._dict)
+        return len(self._labels_arr) - len(self._removed) + len(self._added)
 
     def __iter__(self):
         return iter(self.label_list())
@@ -251,26 +352,67 @@ class _SidecarPartitions(MutableMapping):
     def __contains__(self, key) -> bool:
         if self._dict is not None:
             return key in self._dict
-        if self._set is None:
-            self._set = set(self.label_list())
-        return key in self._set
+        return key in self._added or self._base_has(key)
 
-    # -- entry access / mutation: materialize once, then delegate ------------
+    # -- mutation: overlay for plain appends and deletes ---------------------
     def __getitem__(self, key):
         return self._materialize()[key]
 
     def __setitem__(self, key, value) -> None:
+        if self._dict is None and _plain(value) and not self._base_has(key):
+            if key not in self._added:
+                self._changed()
+            self._added[key] = value
+            return
         self._materialize()[key] = value
 
     def __delitem__(self, key) -> None:
-        del self._materialize()[key]
+        if self._dict is not None:
+            del self._dict[key]
+        elif key in self._added:
+            self._changed()
+            del self._added[key]
+        elif self._base_has(key):
+            self._changed()
+            self._removed.add(key)
+        else:
+            raise KeyError(key)
+
+    def pop(self, key, default=_MISSING):
+        if self._dict is not None:
+            return self._dict.pop(key) if default is _MISSING else self._dict.pop(key, default)
+        if key in self._added:
+            value = self._added[key]
+        elif self._base_has(key):
+            value = {"file": self._base_files()[key]}
+        elif default is _MISSING:
+            raise KeyError(key)
+        else:
+            return default
+        del self[key]
+        return value
+
+    def _flat(self) -> dict | None:
+        """label -> file of the current content, while it is all plain."""
+        cols = self.arrow_columns()
+        return None if cols is None else dict(zip(cols[0].to_pylist(), cols[1].to_pylist()))
 
     def __eq__(self, other):
-        if isinstance(other, _SidecarPartitions):
+        if not isinstance(other, Mapping):
+            return NotImplemented
+        lazy = isinstance(other, _SidecarPartitions)
+        mine = self._flat()
+        if mine is None:
+            return self._materialize() == (other._materialize() if lazy else dict(other))
+        if lazy:
+            theirs = other._flat()
+            if theirs is not None:
+                return mine == theirs
             other = other._materialize()
-        if isinstance(other, Mapping):
-            return self._materialize() == dict(other)
-        return NotImplemented
+        return len(other) == len(mine) and all(
+            _plain(entry) and mine.get(lbl, _MISSING) == entry["file"]
+            for lbl, entry in other.items()
+        )
 
     def __repr__(self) -> str:
         if self._dict is not None:
@@ -364,6 +506,129 @@ def _typed_value(raw: str, dt: T.DataType, binary_codec: str = "hex") -> Any:
             )
         return bytes.fromhex(raw[1:])
     return raw
+
+
+def _decode_value(raw: str, dt: T.DataType, binary_codec: str) -> Any:
+    """One partition value from its (percent-quoted) label rendering: the
+    single decoder behind :meth:`DatasetManifest.partition_values` and the
+    planner's typed key columns."""
+    return _typed_value(unquote(raw) if "%" in raw else raw, dt, binary_codec)
+
+
+class _KeyColumns:
+    """Typed partition-key columns of one label array, decoded in arrow.
+
+    Every distinct directory segment is decoded once (``_decode_value``);
+    per label and key, ``codes`` points at the segment holding the label's
+    value — the last ``k=`` directory segment, or, when a label lacks a
+    key there, the last ``k=`` segment of the whole label (the fallback of
+    :meth:`DatasetManifest.partition_values`). ``bad`` marks labels that
+    cannot decode: an unparsable value in any directory segment of a key,
+    or a key missing from the whole label. Index -1 of the segment arrays
+    is a sentinel (no key, no value)."""
+
+    __slots__ = ("codes", "seg_val", "by_key", "bad")
+
+    def __init__(self, labels, keys: list, types: dict, binary_codec: str):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        if isinstance(labels, pa.ChunkedArray):
+            labels = labels.combine_chunks()
+        n = len(labels)
+        kidx = {k: i for i, k in enumerate(keys)}
+        seg_key: list = []
+        seg_val: list = []
+        seg_bad: list = []
+
+        def encode(segments):
+            """Table codes of ``segments``; new distinct ones are decoded."""
+            enc = segments.dictionary_encode()
+            first = len(seg_key)
+            for s in enc.dictionary.to_pylist():
+                k, eq, raw = s.partition("=")
+                i = kidx.get(k, -1) if eq else -1
+                val, bad = None, False
+                if i >= 0:
+                    try:
+                        val = _decode_value(raw, types[k], binary_codec)
+                    except Exception:
+                        bad = True
+                seg_key.append(i)
+                seg_val.append(val)
+                seg_bad.append(bad)
+            return enc.indices.to_numpy(zero_copy_only=False) + np.int32(first)
+
+        lists = pc.split_pattern(labels, "/")
+        segments = lists.flatten()
+        offsets = lists.offsets.to_numpy()
+        last = offsets[1:] - 1  # each label's file segment
+        is_dir = np.ones(len(segments), bool)
+        is_dir[last] = False
+        parent = np.repeat(np.arange(n), np.diff(offsets))[is_dir]
+        code = encode(segments.filter(pa.array(is_dir)))
+        key_of = np.array(seg_key, np.int64)[code]
+        codes = np.full((len(keys), n), -1, np.int32)
+        for i in range(len(keys)):
+            sel = key_of == i
+            p, c = parent[sel], code[sel]
+            tail = np.ones(len(p), bool)  # last occurrence per label wins
+            tail[:-1] = p[1:] != p[:-1]
+            codes[i, p[tail]] = c[tail]
+        bad = np.zeros(n, bool)
+        bad[parent[np.array(seg_bad, bool)[code]]] = True
+        rows = np.flatnonzero((codes < 0).any(axis=0))
+        if len(rows):
+            # the file segment comes last, so where it names a key it wins
+            fcode = encode(segments.take(pa.array(last[rows])))
+            fkey = np.array(seg_key, np.int64)[fcode]
+            for i in range(len(keys)):
+                sel = fkey == i
+                codes[i, rows[sel]] = fcode[sel]
+            sub = codes[:, rows]
+            bad[rows] |= (sub < 0).any(axis=0) | np.array(seg_bad + [False])[sub].any(axis=0)
+        seg_key.append(-1)
+        seg_val.append(None)
+        self.codes = codes
+        self.seg_val = seg_val
+        self.by_key = [np.flatnonzero(np.array(seg_key) == i) for i in range(len(keys))]
+        self.bad = bad
+
+    def literal(self, i: int, op: str, value: Any):
+        """(holds, raises) per label for the literal ``(key i, op, value)``,
+        evaluated once per distinct value with the planner's own
+        ``_eval_literal_py`` — so python comparison semantics (and its
+        TypeErrors) are exactly the per-label evaluation's."""
+        import numpy as np
+
+        from kartothek_spark.core.predicates import _eval_literal_py
+
+        holds = np.zeros(len(self.seg_val), bool)
+        raises = np.zeros(len(self.seg_val), bool)
+        for j in self.by_key[i]:  # an undecodable one (None) serves only bad labels
+            try:
+                holds[j] = bool(_eval_literal_py(op, self.seg_val[j], value))
+            except Exception:
+                raises[j] = True
+        return holds[self.codes[i]], raises[self.codes[i]]
+
+
+def _segment_mask(labels, segs_dnf):
+    """Arrow boolean mask of the labels matching a DNF of ``"/k=v/"``
+    segments (:func:`_equality_segments`). ``"/k=v/"`` can only match a
+    directory segment (the trailing file segment has no terminating
+    slash), so one leading slash is enough: seg in "/"+lbl ⇔
+    lbl.startswith(seg[1:]) or seg in lbl."""
+    import pyarrow.compute as pc
+
+    mask = None
+    for conj in segs_dnf:
+        m = pc.is_valid(labels)  # an empty conjunction matches every label
+        for seg in conj:
+            m = pc.and_(m, pc.or_(pc.starts_with(labels, seg[1:]), pc.match_substring(labels, seg)))
+        mask = m if mask is None else pc.or_(mask, m)
+    return mask
 
 
 @dataclass
@@ -466,6 +731,9 @@ class DatasetManifest:
     # (set by commit(); never serialized as state — the serialized form
     # is the "partitions_ref" pointer itself)
     _sidecar_ref: str | None = field(default=None, repr=False, compare=False)
+    # (schema object, column name -> Spark type): rebuilt only when the
+    # schema is replaced (never serialized)
+    _types: Any = field(default=None, repr=False, compare=False)
 
     # -- paths --------------------------------------------------------------
     @property
@@ -532,28 +800,50 @@ class DatasetManifest:
         return "percent" if self.external_root else "hex"
 
     # -- primary index (partition values parsed from labels) ----------------
+    def _key_types(self) -> dict[str, T.DataType]:
+        """Column name -> Spark type of the current schema, built once per
+        schema object rather than once per decoded label."""
+        if self._types is None or self._types[0] is not self.schema:
+            self._types = (self.schema, {f.name: f.dataType for f in self.schema.fields})
+        return self._types[1]
+
     def partition_values(self, label: str) -> dict[str, Any]:
-        raw = parse_partition_values(label, self.partition_keys)
-        by_name = {f.name: f.dataType for f in self.schema.fields}
+        types, codec = self._key_types(), self.binary_codec
         return {
-            k: _typed_value(v, by_name[k], binary_codec=self.binary_codec)
-            for k, v in raw.items()
+            k: _decode_value(v, types[k], codec)
+            for k, v in parse_partition_values(label, self.partition_keys).items()
         }
 
     def query(self, predicates=None, **kwargs: Any) -> list[str]:
         """Partition labels surviving partition-key predicate evaluation
-        (reference ``core/dataset.py:317-347``). ``kwargs`` are equality
-        shorthands (``delete_scope`` style).
+        (reference ``core/dataset.py:317-347``), in the partition map's
+        order. ``kwargs`` are equality shorthands (``delete_scope`` style).
 
         Driver-side planning must stay sub-second at 100 TB manifest
-        scale (200k+ files — see BENCH_NOTES.md), so the loop avoids
-        per-label overhead: the schema caster map is hoisted out of the
-        loop, percent-decoding runs only on values that contain '%', and
-        labels sharing one hive directory evaluate ONCE (the per-dir
-        decision is cached — with f files per partition dir this divides
-        the work by f)."""
-        from kartothek_spark.core.predicates import evaluate_predicates_py
-        from kartothek_spark.core.urlencode import unquote
+        scale (200k+ files — see BENCH_NOTES.md), so there is no
+        per-label Python: ONE evaluator turns each DNF literal into a
+        boolean mask over the arrow label column (the lazy sidecar map's
+        column plus its overlay, or the inline dict's labels) and combines
+        the masks with and/or.
+
+        - A DNF made only of canonical ``==`` literals (ints, dates and
+          plain strings that the writer's path escaping leaves as they are
+          — :func:`_equality_segments`) string-matches whole ``/k=v/``
+          segments and parses nothing. EXTERNAL (attached) datasets never
+          take it: a foreign hive writer may use non-canonical renderings
+          (zero-padded ints, unpadded dates) that parse to the same typed
+          value but would not string-match.
+        - Any other DNF is evaluated against typed key columns
+          (:class:`_KeyColumns`): each distinct directory segment is
+          decoded once with :func:`_decode_value`, and each literal is
+          evaluated once per distinct value. Every key is decoded, and
+          literals short-circuit per label as in a per-label evaluation,
+          so a malformed label, an unparsable value or an incomparable
+          literal raises the error the first such label in map order
+          raises. A loaded sidecar map caches its base columns' decode.
+        """
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
         if kwargs:
             extra = [[(k, "==", v) for k, v in kwargs.items()]]
@@ -563,95 +853,84 @@ class DatasetManifest:
         if not self.partition_keys or predicates is None:
             return list(self.partitions)
 
-        by_name = {f.name: f.dataType for f in self.schema.fields}
-        key_set = set(self.partition_keys)
-        casters = {k: by_name[k] for k in self.partition_keys if k in by_name}
-
-        # ==-only fast path (the dominant shape at manifest scale: point
-        # dispatch, delete_scope resolution): render each literal to its
-        # path segment and match whole segments by string containment —
-        # no per-label parse at all. Only taken when every rendered value
-        # is in the identity charset of the writer's path escaping
-        # (ints, dates, plain strings); anything else falls through to
-        # the parsing loop, so the fast path cannot change results.
-        # EXTERNAL (attached) datasets never take it: a foreign hive
-        # writer may use non-canonical renderings (zero-padded ints,
-        # unpadded dates) that parse to the same typed value but would
-        # not string-match — only the engine's own labels are canonical.
+        types = self._key_types()
+        casters = {k: types[k] for k in self.partition_keys if k in types}
         segs_dnf = None if self.external_root else _equality_segments(predicates, casters)
-        if segs_dnf is not None:
-            # "/k=v/" can only match a directory segment (the trailing
-            # file segment has no terminating slash), so one leading
-            # slash is enough: seg in "/"+lbl  ⇔  lbl.startswith(seg[1:])
-            # or seg in lbl — the startswith/contains form avoids a
-            # string concat per label, and on a still-lazy sidecar map
-            # the whole match runs vectorized over the arrow label column
-            # (no 1M-string materialization on the planning path at all)
-            arrow_labels = getattr(self.partitions, "arrow_labels", None)
-            arr = arrow_labels() if arrow_labels is not None else None
-            if arr is not None:
-                import pyarrow.compute as pc
-
-                mask = None
-                for conj in segs_dnf:
-                    m = None
-                    for seg in conj:
-                        sm = pc.or_(
-                            pc.starts_with(arr, seg[1:]), pc.match_substring(arr, seg)
-                        )
-                        m = sm if m is None else pc.and_(m, sm)
-                    if m is None:
-                        # empty conjunction matches every label — mirror
-                        # the dict-backed path, whose all() over an empty
-                        # conj is vacuously true (None here would raise on
-                        # filter() or null-propagate labels away in or_())
-                        return arr.to_pylist()
-                    mask = m if mask is None else pc.or_(mask, m)
-                return arr.filter(mask).to_pylist()
-            if len(segs_dnf) == 1 and len(segs_dnf[0]) == 1:
-                seg = segs_dnf[0][0]  # single point predicate: tightest loop
-                head = seg[1:]
-                return [
-                    lbl
-                    for lbl in self.partitions
-                    if lbl.startswith(head) or seg in lbl
-                ]
-            return [
-                lbl
-                for lbl in self.partitions
-                if any(
-                    all(lbl.startswith(seg[1:]) or seg in lbl for seg in conj)
-                    for conj in segs_dnf
-                )
-            ]
-
-        decisions: dict[str, bool] = {}
-        out = []
-        for label in self.partitions:
-            prefix = label.rpartition("/")[0]
-            dec = decisions.get(prefix)
-            if dec is None:
-                values: dict[str, Any] = {}
-                for seg in prefix.split("/"):
-                    eq = seg.find("=")
-                    if eq > 0:
-                        k = seg[:eq]
-                        if k in key_set:
-                            v = seg[eq + 1:]
-                            if "%" in v:
-                                v = unquote(v)
-                            values[k] = _typed_value(
-                                v, casters[k], binary_codec=self.binary_codec
-                            )
-                if len(values) < len(key_set):
-                    # fall back to the strict parser (raises with the
-                    # missing-keys message) for malformed labels
-                    values = self.partition_values(label)
-                dec = bool(evaluate_predicates_py(predicates, values))
-                decisions[prefix] = dec
-            if dec:
-                out.append(label)
+        parts = getattr(self.partitions, "label_parts", None)
+        parts = parts() if parts is not None else [
+            (pa.array(list(self.partitions), pa.string()), None, None)
+        ]
+        out: list[str] = []
+        for labels, live, cache in parts:
+            if segs_dnf is None:
+                mask = pa.array(self._typed_mask(labels, live, cache, predicates))
+            else:
+                mask = _segment_mask(labels, segs_dnf)
+                if live is not None:
+                    mask = pc.and_(mask, pa.array(live))
+            out += labels.filter(mask).to_pylist()
         return out
+
+    def _typed_mask(self, labels, live, cache, predicates):
+        """numpy mask of the ``live`` labels satisfying ``predicates``,
+        evaluated on typed key columns; raises the error of the first
+        label (in order) that cannot decode or evaluate."""
+        import numpy as np
+
+        keys, codec = self.partition_keys, self.binary_codec
+        types = self._key_types()
+        sig = (tuple(keys), tuple(types.get(k) for k in keys), codec)
+        cols = cache.get(sig) if cache is not None else None
+        if cols is None:
+            cols = _KeyColumns(labels, keys, types, codec)
+            if cache is not None:
+                cache[sig] = cols
+        kidx = {k: i for i, k in enumerate(keys)}
+        if live is None:
+            live = np.ones(len(cols.bad), bool)
+        bad = cols.bad & live
+        todo = live & ~bad
+        out = np.zeros(len(todo), bool)
+        failed = bad.copy()
+        raisers = []
+        for conj in predicates:
+            reach = todo & ~out & ~failed
+            for col, op, value in conj:
+                i = kidx.get(col)
+                if i is None:
+                    continue  # not a partition key: satisfiable here
+                holds, raises = cols.literal(i, op, value)
+                hit = reach & raises
+                if hit.any():
+                    failed |= hit
+                    raisers.append((hit, i, op, value))
+                reach &= holds
+            out |= reach
+        if failed.any():
+            first = int(failed.argmax())
+            if bad[first]:
+                self._raise_label_error(labels[first].as_py())
+            from kartothek_spark.core.predicates import _eval_literal_py
+
+            hit, i, op, value = next(r for r in raisers if r[0][first])
+            _eval_literal_py(op, cols.seg_val[cols.codes[i][first]], value)
+        return out
+
+    def _raise_label_error(self, label: str) -> None:
+        """Decode one label the way the planner meets its segments — the
+        directory values in order, then the whole-label parse of
+        :meth:`partition_values` when a key is missing there — which
+        raises that label's error."""
+        keys, types, codec = set(self.partition_keys), self._key_types(), self.binary_codec
+        found = set()
+        for seg in label.rpartition("/")[0].split("/"):
+            k, eq, raw = seg.partition("=")
+            if eq and k in keys:
+                _decode_value(raw, types[k], codec)
+                found.add(k)
+        if found != keys:
+            self.partition_values(label)
+        raise AssertionError(f"partition label {label!r} decodes on its own")
 
     # -- (de)serialization ---------------------------------------------------
     def to_dict(self) -> dict[str, Any]:
@@ -1000,12 +1279,13 @@ def _write_partitions_sidecar(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    # rewrite of a loaded-but-untouched lazy map: write straight from the
-    # held arrow columns — no dict materialization on the commit path
+    # rewrite of a loaded lazy map (its overlay of plain appends and
+    # deletes included): write straight from the arrow columns — no dict
+    # materialization on the commit path
     lazy = isinstance(partitions, _SidecarPartitions)
     lazy_cols = partitions.arrow_columns() if lazy else None
     if lazy_cols is not None and partitions.source_path:
-        # unmaterialized map == exact bytes of its source sidecar: copy
+        # unmaterialized, unoverlaid map == exact bytes of its source: copy
         # instead of re-encoding (metadata-only commit of a 1M-partition
         # dataset drops from ~0.6 s parquet encode to a file copy)
         import shutil
@@ -1073,9 +1353,6 @@ def _write_partitions_sidecar(
         }
     )
     _atomic_write(path, lambda tmp: pq.write_table(table, tmp, compression="zstd"))
-    if lazy_cols is not None:
-        partitions.source_path = path
-        return partitions
     return _SidecarPartitions(labels_pa, files_pa, source_path=path) if plain else None
 
 

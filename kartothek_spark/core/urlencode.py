@@ -49,14 +49,15 @@ def decode_file_uri_column(col):
 
 
 def parse_partition_values(label: str, partition_keys: list[str]) -> dict[str, str]:
-    """Parse ``K=V`` segments out of a partition label (string values;
-    typed casting is applied later against the dataset schema)."""
+    """Parse ``K=V`` segments out of a partition label. The values stay
+    percent-quoted, as in the path: unquoting and typed casting against
+    the dataset schema happen in one place, ``core.manifest._decode_value``."""
     out: dict[str, str] = {}
     for seg in label.split("/"):
         if "=" in seg:
             k, _, v = seg.partition("=")
             if k in partition_keys:
-                out[k] = unquote(v)
+                out[k] = v
     missing = [k for k in partition_keys if k not in out]
     if missing:
         raise ValueError(f"partition label {label!r} lacks keys {missing}")

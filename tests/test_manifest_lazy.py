@@ -50,7 +50,7 @@ def test_load_is_lazy_and_query_never_materializes(tmp_path):
     assert "nope" not in parts
     # the ==-fast-path point query runs vectorized over the arrow column
     assert m.query([[("p", "==", 123)]]) == ["p=123/part-00123.parquet"]
-    # a range predicate takes the strict parse loop (label iteration only)
+    # a range predicate is evaluated on typed key columns decoded in arrow
     got = sorted(m.query([[("p", "<", 3)]]))
     assert got == [f"p={i}/part-{i:05d}.parquet" for i in range(3)]
     # none of the above may have built the entry dicts
