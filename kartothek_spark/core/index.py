@@ -9,22 +9,32 @@ is read. Spark-first realization:
   (map-side partial aggregation → a single shuffle on the indexed column);
 * store = a Parquet table ``(value, partitions: array<string>)`` under
   ``<uuid>/indices/<col>/<version>.by-dataset-index.parquet``;
-* query = evaluate the DNF conjunction against the *index table* and
-  collect only the surviving labels — the index never has to fit in driver
-  memory (reference loads the whole dict; ours filters distributed and
-  collects labels only, which is what survives at 100 TB cardinalities);
+* query = evaluate the DNF conjunction on the driver with ``pyarrow.dataset``
+  (as the reference loads its indices with pyarrow): the literals become one
+  arrow filter on ``value``, pushed into row-group statistics, and only the
+  ``partitions`` of matching rows are read — no Spark job. Driver memory is
+  bounded by the matching rows, the same bound as collecting the labels of
+  a distributed filter;
 * maintenance = anti-join removed labels / union new pairs, copy-on-write
   to a new index file; the manifest pointer swap publishes it.
 """
 
 from __future__ import annotations
 
+import calendar
+import datetime
+import decimal
+import math
+import operator
 import os
+import time
 import uuid as _uuid
-from typing import TYPE_CHECKING, Sequence
+from functools import reduce
+from typing import TYPE_CHECKING, Any, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kartothek_spark.core.urlencode import decode_file_uri_column
 
@@ -107,10 +117,24 @@ def build_index(spark: SparkSession, manifest: "DatasetManifest", column: str) -
     return _write_index(_pairs_df(spark, manifest, column), manifest, column)
 
 
+def _index_schema(manifest: "DatasetManifest", column: str) -> T.StructType:
+    """(value typed as the manifest column, partitions array<string>)."""
+    field = next(f for f in manifest.schema.fields if f.name == column)
+    return T.StructType(
+        [
+            T.StructField("value", field.dataType),
+            T.StructField("partitions", T.ArrayType(T.StringType())),
+        ]
+    )
+
+
 def load_index(spark: SparkSession, manifest: "DatasetManifest", column: str) -> DataFrame:
-    """Index table as (value, partitions array)."""
+    """Index table as (value, partitions array). The explicit schema spares
+    the footer-inference job a schema-less read starts."""
     rel = manifest.indices[column]
-    return spark.read.parquet("file:" + os.path.abspath(os.path.join(manifest.root, rel)))
+    return spark.read.schema(_index_schema(manifest, column)).parquet(
+        "file:" + os.path.abspath(os.path.join(manifest.root, rel))
+    )
 
 
 def update_index(
@@ -135,6 +159,85 @@ def update_index(
     return _write_index(pairs, manifest, column)
 
 
+# Before this year PySpark's date and datetime literals reach Spark as
+# java.sql values on the hybrid Julian calendar (and, for timestamps, with
+# local-mean-time zone offsets); their Spark value is not shown equal to
+# the proleptic one, so such a literal does not prune.
+_CALENDAR_EXACT_FROM = 1900
+
+_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+
+_ARROW_OPS = {
+    "==": operator.eq,
+    "!=": operator.ne,
+    "<": operator.lt,
+    "<=": operator.le,
+    ">": operator.gt,
+    ">=": operator.ge,
+}
+
+
+def _literal_value(dt: T.DataType, v: Any) -> Any:
+    """Literal ``v`` as Spark compares it against a column of type ``dt``
+    (timestamps as epoch microseconds), or None when that value is not
+    shown exactly — such a literal then does not prune."""
+    import numpy as np
+
+    if isinstance(v, (np.integer, np.floating, np.bool_)):
+        v = v.item()  # what PySpark's lit() sends for a numpy scalar
+    if isinstance(dt, T.BooleanType):
+        return v if isinstance(v, bool) else None
+    if isinstance(dt, _INTEGRAL):
+        return v if isinstance(v, int) and not isinstance(v, bool) else None
+    if isinstance(dt, (T.FloatType, T.DoubleType)):
+        # Spark orders NaN above every number and equal to itself; arrow
+        # matches nothing against it
+        return v if isinstance(v, float) and not math.isnan(v) else None
+    if isinstance(dt, T.DecimalType):
+        return v if isinstance(v, decimal.Decimal) and v.is_finite() else None
+    if isinstance(dt, T.StringType):
+        return v if isinstance(v, str) else None
+    if isinstance(dt, T.BinaryType):
+        return bytes(v) if isinstance(v, (bytes, bytearray)) else None
+    if isinstance(dt, T.DateType):
+        if isinstance(v, datetime.date) and not isinstance(v, datetime.datetime):
+            return v if v.year >= _CALENDAR_EXACT_FROM else None
+        return None
+    if isinstance(dt, T.TimestampType) and isinstance(v, datetime.datetime):
+        if v.year < _CALENDAR_EXACT_FROM:
+            return None
+        # PySpark's DatetimeConverter: an aware literal is a UTC instant, a
+        # naive one is local time of this process
+        seconds = calendar.timegm(v.utctimetuple()) if v.tzinfo else time.mktime(v.timetuple())
+        return int(seconds) * 1_000_000 + v.microsecond
+    return None  # TimestampNTZ, nested types: not shown exact
+
+
+def _literal_filter(dt: T.DataType, arrow_type, op: str, literal: Any):
+    """Arrow filter on ``value`` equal to Spark's ``value <op> literal`` on
+    non-NaN values, or None when the literal cannot prune exactly."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    value = pc.field("value")
+    try:
+        if op == "in":
+            vals = [_literal_value(dt, v) for v in literal]
+            if any(v is None for v in vals):
+                return None
+            if isinstance(dt, (T.FloatType, T.DoubleType)) and 0.0 in vals:
+                # arrow's is_in tells -0.0 from 0.0 apart; Spark does not
+                vals += [0.0, -0.0]
+            return value.isin(pa.array(vals, arrow_type))
+        v = _literal_value(dt, literal)
+        if v is None:
+            return None
+        return _ARROW_OPS[op](value, pa.scalar(v, arrow_type))
+    except (ArithmeticError, ValueError, TypeError, pa.ArrowException):
+        # out of the column type's range or precision, or not encodable
+        return None
+
+
 def query_index_labels(
     spark: SparkSession,
     manifest: "DatasetManifest",
@@ -143,17 +246,38 @@ def query_index_labels(
 ) -> set[str]:
     """Labels whose index entries satisfy ALL literals (one conjunction's
     restriction on this column) — reference P12 ``eval_operator``/``query``.
-    The filter runs distributed; only labels are collected."""
-    from kartothek_spark.core.predicates import predicates_to_column
 
-    idx = load_index(spark, manifest, column)
-    preds = [[("value", op, v) for (_c, op, v) in literals]]
-    hits = (
-        idx.where(predicates_to_column(preds))
-        .select(F.explode("partitions").alias("label"))
-        .distinct()
+    Evaluated on the driver with ``pyarrow.dataset``, starting no Spark
+    job: the conjunction is one arrow filter on ``value``, pushed into
+    row-group statistics, and only the matching rows' ``partitions`` are
+    read. Pruning stays a superset of the scan filter: a literal whose
+    Spark value is not shown exact does not prune, and on float columns a
+    NaN value is always kept."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    dt = _index_schema(manifest, column)["value"].dataType
+    vtype = to_arrow_type(dt)
+    conds = [_literal_filter(dt, vtype, op, v) for (_c, op, v) in literals]
+    conds = [c for c in conds if c is not None]
+    expr = reduce(operator.and_, conds) if conds else None
+    if expr is not None and isinstance(dt, (T.FloatType, T.DoubleType)):
+        expr = expr | pc.is_nan(pc.field("value"))
+    # Spark writes timestamps as INT96; read them at microseconds, Spark's
+    # unit, and let the explicit schema cast them (and widened widths) as
+    # the Spark read of load_index does
+    fmt = ds.ParquetFileFormat(
+        read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
     )
-    return {r.label for r in hits.collect()}
+    index = ds.dataset(
+        os.path.join(manifest.root, manifest.indices[column]),
+        schema=pa.schema([("value", vtype), ("partitions", pa.list_(pa.string()))]),
+        format=fmt,
+    )
+    hits = index.to_table(columns=["partitions"], filter=expr).column("partitions")
+    return set(pc.unique(pc.list_flatten(hits)).to_pylist())
 
 
 def filter_indices(

@@ -42,7 +42,13 @@ from kartothek_spark.core.predicates import (
 )
 from kartothek_spark.core.urlencode import decode_file_uri_column
 from kartothek_spark.cube.build import discover_datasets, get_cube_payload
-from kartothek_spark.dataset.read import dispatch_labels
+from kartothek_spark.dataset.read import (
+    _binary_partition_keys,
+    _retyped_col,
+    _scan_files,
+    _translate_binary_predicates,
+    dispatch_labels,
+)
 
 
 def _read_with_lineage(
@@ -67,13 +73,16 @@ def _read_with_lineage(
         if lbl in wanted
     ]
     ord_df = spark.createDataFrame(ordinals, "__ktk_path string, __ktk_ord long")
-    files = ["file:" + path for path, _i in ordinals]
-    df = spark.read.option("basePath", "file:" + os.path.abspath(manifest.data_root)).parquet(*files)
+    # the manifest-schema scan read_table uses: no footer inference job
+    df = _scan_files(spark, manifest, [path for path, _i in ordinals])
+    binkeys = _binary_partition_keys(manifest)
     if predicates is not None:
-        df = df.where(predicates_to_column(predicates))
+        df = df.where(
+            predicates_to_column(_translate_binary_predicates(predicates, binkeys))
+        )
     by_name = {f.name: f.dataType for f in manifest.schema.fields}
     df = df.select(
-        *[F.col(c).cast(by_name[c]).alias(c) for c in columns],
+        *[_retyped_col(c, by_name[c], binkeys) for c in columns],
         decode_file_uri_column(F.col("_metadata.file_path")).alias("__ktk_path"),
         F.col("_metadata.row_index").alias("__ktk_row"),
     )

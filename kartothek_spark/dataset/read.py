@@ -5,10 +5,11 @@ Re-expresses the reference read lifecycle (survey §3.1:
 io_components/read.py:75-178, ``MetaPartition.load_dataframes``
 metapartition.py:735-884 in /root/reference) Spark-first:
 
-* the PLANNER (driver, O(1) store round-trips) prunes the file list with
-  the partition-key part of the DNF (labels parsed from hive paths) and
-  with secondary inverted indices (distributed filter over index tables,
-  collect labels only);
+* the PLANNER (driver, O(1) store round-trips, no Spark job) prunes the
+  file list with the partition-key part of the DNF (labels parsed from
+  hive paths) and with secondary inverted indices (read on the driver with
+  pyarrow, the value filter pushed into row groups; driver memory is
+  bounded by the matching index rows);
 * the SCAN is one ``spark.read.parquet(*surviving_files)`` with
   ``basePath`` so partition columns are reconstructed typed from paths —
   Spark never even sees non-matching files, which is the entire point of

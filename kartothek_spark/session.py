@@ -45,6 +45,12 @@ def get_spark(app_name: str = "kartothek_spark", shuffle_partitions: int | None 
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
+        # planned scans pass the manifest's explicit file list; above this
+        # many paths Spark lists them with a distributed job (one task per
+        # path) before the plan exists. Listed on the driver instead, a
+        # 35-file read builds in 29 ms instead of 325 ms. Kept above any
+        # planned scan, so building a read starts no job.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
     )

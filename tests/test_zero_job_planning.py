@@ -1,0 +1,73 @@
+"""Building a planned read starts no Spark job: the index lookup runs on
+the driver, the manifest file list is not listed by a job, and cube members
+are read with the manifest schema (no footer inference). The only jobs of
+a read are its action's. Counted with the status tracker per job group."""
+
+from __future__ import annotations
+
+import uuid
+
+import pytest
+from pyspark.sql import Row
+
+from kartothek_spark.core.cube import Cube
+from kartothek_spark.cube.build import build_cube
+from kartothek_spark.cube.query import query_cube
+from kartothek_spark.dataset.read import read_table
+
+PARTITIONS = 48
+
+CUBE = Cube(
+    dimension_columns=("x",),
+    partition_columns=("p",),
+    uuid_prefix="zj",
+    seed_dataset="seed",
+    index_columns=frozenset({"i1"}),
+)
+
+
+@pytest.fixture(scope="module")
+def cube_root(spark, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("zerojob"))
+    seed = spark.createDataFrame(
+        [Row(x=x, p=x % PARTITIONS, v=3 * x, i1=x % 97) for x in range(4 * PARTITIONS)]
+    )
+    enrich = spark.createDataFrame(
+        [Row(x=x, p=x % PARTITIONS, w=x + 1) for x in range(4 * PARTITIONS)]
+    )
+    build_cube(spark, {"seed": seed, "enrich": enrich}, CUBE, root)
+    return root
+
+
+def _jobs(spark, build):
+    """(result of ``build()``, ids of the Spark jobs it started)."""
+    sc = spark.sparkContext
+    before = sc.getLocalProperty("spark.jobGroup.id")
+    group = "plan-" + uuid.uuid4().hex
+    sc.setJobGroup(group, "planning only")
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", before)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_table_with_index_predicate_plans_without_jobs(spark, cube_root):
+    uuid_ = CUBE.ktk_dataset_uuid("seed")
+    preds = [[("i1", "in", [3, 50, 96])]]
+    df, jobs = _jobs(spark, lambda: read_table(spark, cube_root, uuid_, predicates=preds))
+    assert jobs == []
+    # the tracker does see the action's jobs
+    rows, action_jobs = _jobs(spark, df.collect)
+    assert action_jobs
+    assert sorted(r.x for r in rows) == [x for x in range(4 * PARTITIONS) if x % 97 in (3, 50, 96)]
+
+
+def test_query_cube_with_index_condition_plans_without_jobs(spark, cube_root):
+    conds = [[("i1", "in", [3, 50])]]
+    df, jobs = _jobs(spark, lambda: query_cube(spark, CUBE, cube_root, conditions=conds))
+    assert jobs == []
+    rows = df.collect()
+    assert sorted((r.x, r.w) for r in rows) == [
+        (x, x + 1) for x in range(4 * PARTITIONS) if x % 97 in (3, 50)
+    ]
