@@ -1,22 +1,40 @@
-"""Secondary inverted indices as Parquet-backed DataFrames.
+"""Secondary inverted indices as Parquet files maintained on the driver.
 
-Parity target: ``ExplicitSecondaryIndex`` (``kartothek/core/index.py:43-955``
-in /root/reference) — ``Map[value → List[partition_label]]`` persisted as its
+Parity target: the reference's ``ExplicitSecondaryIndex``
+(``kartothek/core/index.py:43-955``) — ``Map[value → List[partition_label]]`` persisted as its
 own Parquet file, used at plan time to prune the file list *before* any data
-is read. Spark-first realization:
+is read. As the reference's ``IndexBase.update`` (``core/index.py:290-336``)
+and ``store`` (``:670-757``) do, every index change is one in-memory merge
+on the driver with pyarrow, starting no Spark job:
 
-* build = one distributed job: ``groupBy(value).agg(collect_set(label))``
-  (map-side partial aggregation → a single shuffle on the indexed column);
-* store = a Parquet table ``(value, partitions: array<string>)`` under
-  ``<uuid>/indices/<col>/<version>.by-dataset-index.parquet``;
-* query = evaluate the DNF conjunction on the driver with ``pyarrow.dataset``
-  (as the reference loads its indices with pyarrow): the literals become one
-  arrow filter on ``value``, pushed into row-group statistics, and only the
-  ``partitions`` of matching rows are read — no Spark job. Driver memory is
-  bounded by the matching rows, the same bound as collecting the labels of
-  a distributed filter;
-* maintenance = anti-join removed labels / union new pairs, copy-on-write
-  to a new index file; the manifest pointer swap publishes it.
+* store = one snappy Parquet file ``(value, partitions: list<string>)``,
+  sorted by value, at ``<uuid>/indices/<col>/<version>.by-dataset-index.parquet/part-00000.parquet``
+  (a directory, so indices written by Spark, several part files and
+  ``.crc``/``_SUCCESS`` bookkeeping included, keep loading);
+* maintenance = read the committed index with ``pyarrow.dataset`` (explicit
+  ``(value, partitions)`` schema, INT96 timestamps at microseconds), flatten
+  it to ``(value, label)`` pairs, drop the removed labels, add the new
+  files' pairs, and group into distinct, sorted label lists — a new file
+  (copy-on-write) that the manifest pointer swap publishes. A build is the
+  same merge with no committed index. Semantics are Spark's former
+  ``groupBy(value).agg(collect_set(label))``: null values are left out,
+  labels are distinct per value, a value whose list becomes empty is
+  dropped, and on float columns -0.0 groups with 0.0 and every NaN is one
+  value;
+* new pairs = for parquet payloads, one ``pyarrow.dataset`` scan of the new
+  labels' files with the manifest's one-column schema (widened ints cast,
+  files from before a schema evolution read the column as null), nulls
+  dropped and each scanned batch deduplicated; a partition-key index takes
+  its values from the labels. csv, csv.gz, jsonl and orc have no pyarrow
+  reader that parses as Spark does, so their pairs come from the manifest's
+  Spark scan, deduplicated and collected with ``toArrow()``;
+* query = evaluate the DNF conjunction on the driver with the same reader:
+  the literals become one arrow filter on ``value``, pushed into row-group
+  statistics, and only the ``partitions`` of matching rows are read.
+
+Driver memory: a lookup holds the matching rows; a merge holds the
+committed index's ``(value, label)`` pairs plus the new files' distinct
+pairs — the bound of the reference's in-memory ``IndexBase.update``.
 """
 
 from __future__ import annotations
@@ -30,11 +48,17 @@ import os
 import time
 import uuid as _uuid
 from functools import reduce
-from typing import TYPE_CHECKING, Any, Sequence
+from typing import TYPE_CHECKING, Any, Iterable, Sequence
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from kartothek_spark.core.urlencode import decode_file_uri_column
 
@@ -44,56 +68,128 @@ if TYPE_CHECKING:
 INDEX_SUFFIX = ".by-dataset-index.parquet"
 
 
-def _file_label_df(spark: SparkSession, manifest: "DatasetManifest", labels: Sequence[str] | None = None) -> DataFrame:
-    """Tiny (file_uri → label) mapping, broadcast into the index job."""
-    labels = list(manifest.partitions) if labels is None else list(labels)
-    rows = [(os.path.abspath(manifest.file_path(lbl)), lbl) for lbl in labels]
-    return spark.createDataFrame(rows, "file_path string, __ktk_label string")
+def _value_types(manifest: "DatasetManifest", column: str) -> tuple[T.DataType, pa.DataType]:
+    """(Spark type, arrow type) of an indexed column in the manifest schema."""
+    dt = next(f for f in manifest.schema.fields if f.name == column).dataType
+    return dt, to_arrow_type(dt)
 
 
-def _pairs_df(spark: SparkSession, manifest: "DatasetManifest", column: str, labels: Sequence[str] | None = None) -> DataFrame:
-    """(value, label) pairs for an indexed column over the given partitions."""
-    labels = list(manifest.partitions) if labels is None else list(labels)
-    if not labels:
-        field = next(f for f in manifest.schema.fields if f.name == column)
-        from pyspark.sql import types as T
+def _parquet_dataset(paths, schema: pa.Schema):
+    """pyarrow dataset over local parquet ``paths`` read with ``schema``.
+    Spark writes timestamps as INT96; they are read at microseconds, Spark's
+    unit, and the explicit schema casts them (and widened widths) as
+    Spark's own read with a schema does."""
+    fmt = ds.ParquetFileFormat(
+        read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+    )
+    return ds.dataset(paths, schema=schema, format=fmt, filesystem=pafs.LocalFileSystem())
 
-        return spark.createDataFrame(
-            [], T.StructType([field, T.StructField("__ktk_label", T.StringType())])
+
+def _pair_schema(vtype) -> pa.Schema:
+    return pa.schema([("value", vtype), ("label", pa.string())])
+
+
+def _index_dataset(manifest: "DatasetManifest", column: str):
+    """The committed index of ``column`` as a pyarrow dataset with the
+    explicit (value typed as the manifest column, partitions) schema."""
+    _dt, vtype = _value_types(manifest, column)
+    return _parquet_dataset(
+        os.path.abspath(os.path.join(manifest.root, manifest.indices[column])),
+        pa.schema([("value", vtype), ("partitions", pa.list_(pa.string()))]),
+    )
+
+
+def flatten_index(index) -> pa.Table:
+    """(value, label) pairs of an index table or dataset whose two columns
+    are a value and its list of labels."""
+    schema = _pair_schema(index.schema.field(0).type)
+    batches = [
+        pa.record_batch(
+            [b.column(0).take(pc.list_parent_indices(b.column(1))), pc.list_flatten(b.column(1))],
+            schema=schema,
         )
+        for b in index.to_batches()
+    ]
+    return pa.Table.from_batches(batches, schema=schema)
+
+
+def _new_pairs(
+    spark: SparkSession, manifest: "DatasetManifest", column: str, labels: Sequence[str]
+) -> pa.Table:
+    """(value, label) pairs of an indexed column over the given partitions."""
+    _dt, vtype = _value_types(manifest, column)
+    schema = _pair_schema(vtype)
+    labels = list(labels)
+    if not labels:
+        return schema.empty_table()
     if column in manifest.partition_keys:
         # partition-key index needs no data read: values come from labels
-        rows = [(manifest.partition_values(lbl)[column], lbl) for lbl in labels]
-        from pyspark.sql import types as T
+        values = [manifest.partition_values(lbl)[column] for lbl in labels]
+        return pa.table([pa.array(values, vtype), pa.array(labels, pa.string())], schema=schema)
+    paths = [os.path.abspath(manifest.file_path(lbl)) for lbl in labels]
+    if manifest.table_format != "parquet":
+        return _scanned_pairs(spark, manifest, column, labels, paths, schema)
+    label_of = dict(zip(paths, labels))
+    scanner = _parquet_dataset(paths, pa.schema([(column, vtype)])).scanner(
+        filter=pc.field(column).is_valid()
+    )
+    batches = []
+    for tagged in scanner.scan_batches():
+        values = pc.unique(tagged.record_batch.column(0))
+        label = pa.array([label_of[tagged.fragment.path]] * len(values), pa.string())
+        batches.append(pa.record_batch([values, label], schema=schema))
+    return pa.Table.from_batches(batches, schema=schema)
 
-        field = next(f for f in manifest.schema.fields if f.name == column)
-        return spark.createDataFrame(
-            rows, T.StructType([field, T.StructField("__ktk_label", T.StringType())])
-        )
-    mapping = _file_label_df(spark, manifest, labels)
 
-    # the format-dispatched manifest scan (explicit schema: files from
-    # before a schema evolution may lack the indexed column entirely —
-    # they read as NULL and the isNotNull below keeps them out of the
-    # index, matching reference build_indices dropna semantics). Function
-    # -level import: read.py imports this module at its top level.
+def _scanned_pairs(
+    spark: SparkSession,
+    manifest: "DatasetManifest",
+    column: str,
+    labels: list[str],
+    paths: list[str],
+    schema: pa.Schema,
+) -> pa.Table:
+    """(value, label) pairs of a csv/jsonl/orc payload, read by the
+    manifest's Spark scan (explicit schema: files from before a schema
+    evolution read the column as NULL and stay out of the index)."""
+    # function-level import: read.py imports this module at its top level
     from kartothek_spark.dataset.read import _scan_files
 
-    df = (
-        _scan_files(spark, manifest, manifest.files(labels))
+    got = (
+        _scan_files(spark, manifest, paths)
         .select(
-            F.col(column),
+            F.col(column).alias("value"),
             # input_file_name() yields a percent-encoded file:///… URI —
-            # decode to the on-disk path so it joins against the manifest
-            # mapping even when partition values contain ':'/' '/'%'
-            decode_file_uri_column(F.input_file_name()).alias("file_path"),
+            # decode to the on-disk path so it matches the manifest's
+            # even when partition values contain ':'/' '/'%'
+            decode_file_uri_column(F.input_file_name()).alias("path"),
         )
-        .where(F.col(column).isNotNull())
+        .where(F.col("value").isNotNull())
+        .distinct()
+        .toArrow()
     )
-    return (
-        df.join(F.broadcast(mapping), "file_path")
-        .select(column, "__ktk_label")
+    label = pa.array(labels, pa.string()).take(pc.index_in(got["path"], value_set=pa.array(paths)))
+    return pa.table([got["value"].cast(schema.field("value").type), label], schema=schema)
+
+
+def _grouped(pairs: pa.Table, dt: T.DataType) -> pa.Table:
+    """(value, distinct sorted labels) per non-null value, sorted by value —
+    Spark's ``groupBy(value).agg(collect_set(label))``."""
+    pairs = pairs.filter(pc.and_(pc.is_valid(pairs["value"]), pc.is_valid(pairs["label"])))
+    if isinstance(dt, (T.FloatType, T.DoubleType)):
+        # Spark's groupBy normalizes -0.0 to 0.0 and every NaN to one NaN;
+        # arrow's grouping tells their bit patterns apart
+        v = pairs["value"]
+        v = pc.if_else(pc.equal(v, 0), pa.scalar(0.0, v.type), v)
+        v = pc.if_else(pc.is_nan(v), pa.scalar(math.nan, v.type), v)
+        pairs = pairs.set_column(0, "value", v)
+    out = (
+        pairs.sort_by([("value", "ascending"), ("label", "ascending")])
+        .group_by("value", use_threads=False)
+        .aggregate([("label", "distinct")])
     )
+    schema = pa.schema([pairs.schema.field("value"), ("partitions", pa.list_(pa.string()))])
+    return pa.table([out["value"], out["label_distinct"]], schema=schema)
 
 
 def _index_path(manifest: "DatasetManifest", column: str) -> str:
@@ -101,20 +197,34 @@ def _index_path(manifest: "DatasetManifest", column: str) -> str:
     return os.path.join(manifest.dataset_uuid, "indices", column, version + INDEX_SUFFIX)
 
 
-def _write_index(pairs: DataFrame, manifest: "DatasetManifest", column: str) -> str:
+def write_index(manifest: "DatasetManifest", column: str, pairs: pa.Table) -> str:
+    """Group (value, label) ``pairs`` into a new version of ``column``'s
+    index — the one writer of index files. Returns its root-relative path."""
+    dt, _vtype = _value_types(manifest, column)
+    table = _grouped(pairs, dt)
     rel = _index_path(manifest, column)
-    out = (
-        pairs.groupBy(column)
-        .agg(F.collect_set("__ktk_label").alias("partitions"))
-        .withColumnRenamed(column, "value")
-    )
-    out.write.mode("overwrite").parquet("file:" + os.path.abspath(os.path.join(manifest.root, rel)))
+    dest = os.path.join(manifest.root, rel)
+    os.makedirs(dest)
+    # values are distinct, so only the labels are dictionary-encoded; only
+    # the value statistics serve row-group pruning; the readers pass their
+    # own schema, so the footer carries no arrow schema. An empty index is
+    # a file with the schema and no row group, as Spark writes one.
+    with pq.ParquetWriter(
+        os.path.join(dest, "part-00000.parquet"),
+        table.schema,
+        compression="snappy",
+        use_dictionary=["partitions.list.element"],
+        write_statistics=["value"],
+        store_schema=False,
+    ) as w:
+        if table.num_rows:
+            w.write_table(table)
     return rel
 
 
 def build_index(spark: SparkSession, manifest: "DatasetManifest", column: str) -> str:
     """Full (re)build — reference X5 ``build_dataset_indices``."""
-    return _write_index(_pairs_df(spark, manifest, column), manifest, column)
+    return write_index(manifest, column, _new_pairs(spark, manifest, column, manifest.partitions))
 
 
 def _index_schema(manifest: "DatasetManifest", column: str) -> T.StructType:
@@ -145,18 +255,34 @@ def update_index(
     removed_labels: Sequence[str],
 ) -> str:
     """Incremental maintenance (reference X2 ``IndexBase.update /
-    remove_partitions``): explode old index, drop removed labels, union new
-    pairs, re-group, write a new version (copy-on-write)."""
-    old = (
-        load_index(spark, manifest, column)
-        .select(F.col("value").alias(column), F.explode("partitions").alias("__ktk_label"))
-    )
+    remove_partitions``): flatten the committed index, drop removed
+    labels, add the new labels' pairs, re-group, write a new version
+    (copy-on-write)."""
+    old = flatten_index(_index_dataset(manifest, column))
     if removed_labels:
-        old = old.where(~F.col("__ktk_label").isin(list(removed_labels)))
-    pairs = old
-    if new_labels:
-        pairs = pairs.unionByName(_pairs_df(spark, manifest, column, new_labels))
-    return _write_index(pairs, manifest, column)
+        drop = pc.is_in(old["label"], value_set=pa.array(list(removed_labels), pa.string()))
+        old = old.filter(pc.invert(drop))
+    new = _new_pairs(spark, manifest, column, new_labels)
+    return write_index(manifest, column, pa.concat_tables([old, new]))
+
+
+def index_values_by_label(
+    manifest: "DatasetManifest", column: str, labels: Iterable[str]
+) -> dict[str, list]:
+    """label → the indexed values it holds, for ``labels``, read on the
+    driver; values are the Python objects a Spark ``collect`` returns."""
+    dt, _vtype = _value_types(manifest, column)
+    pairs = flatten_index(_index_dataset(manifest, column))
+    pairs = pairs.filter(pc.is_in(pairs["label"], value_set=pa.array(list(labels), pa.string())))
+    if isinstance(dt, T.TimestampType):
+        # Spark collects timestamps as naive local datetimes
+        values = [dt.fromInternal(v) for v in pairs["value"].cast(pa.int64()).to_pylist()]
+    else:
+        values = pairs["value"].to_pylist()
+    out: dict[str, list] = {}
+    for value, label in zip(values, pairs["label"].to_pylist()):
+        out.setdefault(label, []).append(value)
+    return out
 
 
 # Before this year PySpark's date and datetime literals reach Spark as
@@ -216,9 +342,6 @@ def _literal_value(dt: T.DataType, v: Any) -> Any:
 def _literal_filter(dt: T.DataType, arrow_type, op: str, literal: Any):
     """Arrow filter on ``value`` equal to Spark's ``value <op> literal`` on
     non-NaN values, or None when the literal cannot prune exactly."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     value = pc.field("value")
     try:
         if op == "in":
@@ -253,30 +376,13 @@ def query_index_labels(
     read. Pruning stays a superset of the scan filter: a literal whose
     Spark value is not shown exact does not prune, and on float columns a
     NaN value is always kept."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.dataset as ds
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    dt = _index_schema(manifest, column)["value"].dataType
-    vtype = to_arrow_type(dt)
+    dt, vtype = _value_types(manifest, column)
     conds = [_literal_filter(dt, vtype, op, v) for (_c, op, v) in literals]
     conds = [c for c in conds if c is not None]
     expr = reduce(operator.and_, conds) if conds else None
     if expr is not None and isinstance(dt, (T.FloatType, T.DoubleType)):
         expr = expr | pc.is_nan(pc.field("value"))
-    # Spark writes timestamps as INT96; read them at microseconds, Spark's
-    # unit, and let the explicit schema cast them (and widened widths) as
-    # the Spark read of load_index does
-    fmt = ds.ParquetFileFormat(
-        read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
-    )
-    index = ds.dataset(
-        os.path.join(manifest.root, manifest.indices[column]),
-        schema=pa.schema([("value", vtype), ("partitions", pa.list_(pa.string()))]),
-        format=fmt,
-    )
-    hits = index.to_table(columns=["partitions"], filter=expr).column("partitions")
+    hits = _index_dataset(manifest, column).to_table(columns=["partitions"], filter=expr).column("partitions")
     return set(pc.unique(pc.list_flatten(hits)).to_pylist())
 
 
@@ -310,8 +416,11 @@ def index_as_dataframe(spark: SparkSession, manifest: "DatasetManifest", column:
 __all__ = [
     "build_index",
     "filter_indices",
+    "flatten_index",
     "index_as_dataframe",
+    "index_values_by_label",
     "load_index",
     "query_index_labels",
     "update_index",
+    "write_index",
 ]

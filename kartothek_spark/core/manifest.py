@@ -428,9 +428,11 @@ def _equality_segments(predicates, casters) -> list[list[str]] | None:
     Renderings mirror the hive writer exactly for the supported types:
     int → decimal string, date → ISO, str → itself (safe chars only).
     bool/float/timestamp render differently than ``str()`` and are left
-    to the strict path. The literal's python type must agree with the
-    column's type class — a mismatched literal must keep flowing into the
-    strict path so the type-stability guard raises, not silently match."""
+    to the strict path, as are decimals: ``Decimal("1.5")`` must find the
+    ``d=1.50`` directory, which only a typed comparison does. The
+    literal's python type must agree with the column's type class — a
+    mismatched literal must keep flowing into the strict path so the
+    type-stability guard raises, not silently match."""
     import datetime
     import re
 
@@ -483,6 +485,7 @@ def _typed_value(raw: str, dt: T.DataType, binary_codec: str = "hex") -> Any:
     :func:`kartothek_spark.core.urlencode.unquote` re-encodes to the
     exact original bytes."""
     import datetime
+    import decimal
 
     if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
         return int(raw)
@@ -505,6 +508,8 @@ def _typed_value(raw: str, dt: T.DataType, binary_codec: str = "hex") -> Any:
                 "x<hex> rendering"
             )
         return bytes.fromhex(raw[1:])
+    if isinstance(dt, T.DecimalType):
+        return decimal.Decimal(raw)
     return raw
 
 

@@ -28,10 +28,11 @@ Format parity targets (all in /root/reference):
 
 Spark-first notes: the import is metadata-only on the driver (the
 reference manifest is by construction driver-sized — kartothek loads it
-into one process too); the only distributed work is the optional external
-index conversion and stats collection, each one Spark job. Payload files
-are never read, moved, or rewritten — at 100 TB that is the difference
-between a metadata operation and a week of IO.
+into one process too); indices convert on the driver, as kartothek loads
+them too, and the only distributed work is the optional stats collection,
+one Spark job. Payload files are never read, moved, or rewritten — at
+100 TB that is the difference between a metadata operation and a week of
+IO.
 """
 
 from __future__ import annotations
@@ -44,6 +45,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from kartothek_spark.core.manifest import TABLE, DatasetManifest, _typed_value
 from kartothek_spark.core import index as ktk_index
@@ -144,50 +146,32 @@ def _import_embedded_index(
     the engine's index parquet. JSON stringifies keys, so values are
     re-typed against the dataset schema before writing."""
     field = next(f for f in manifest.schema.fields if f.name == column)
-    values = [_typed_value(str(v), field.dataType) for v in index_dct]
-    labels = [list(v) for v in index_dct.values()]
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    table = pa.Table.from_arrays(
-        [
-            pa.array(values, type=to_arrow_type(field.dataType)),
-            pa.array(labels, type=pa.list_(pa.string())),
-        ],
-        names=["value", "partitions"],
+    values, labels = [], []
+    for v, lbls in index_dct.items():
+        typed = _typed_value(str(v), field.dataType)
+        values += [typed] * len(lbls)
+        labels += list(lbls)
+    pairs = pa.table(
+        [pa.array(values, to_arrow_type(field.dataType)), pa.array(labels, pa.string())],
+        names=["value", "label"],
     )
-    rel = os.path.join(
-        manifest.dataset_uuid, "indices", column, "imported" + ktk_index.INDEX_SUFFIX
-    )
-    dest = os.path.join(manifest.root, rel)
-    os.makedirs(dest, exist_ok=True)
-    pq.write_table(table, os.path.join(dest, "part-0.parquet"))
-    return rel
+    return ktk_index.write_index(manifest, column, pairs)
 
 
 def _import_external_index(
-    spark: SparkSession,
-    manifest: DatasetManifest,
-    column: str,
-    source_root: str,
-    storage_key: str,
+    manifest: DatasetManifest, column: str, source_root: str, storage_key: str
 ) -> str:
     """Convert a reference external index parquet (``[<column>,
-    partition: list<string>]``) to the engine layout (``[value,
-    partitions]``) — a single column-rename scan/write job, distributed
-    because a secondary index over a 100 TB dataset can itself be large."""
-    src = os.path.join(source_root, storage_key)
-    rel = os.path.join(
-        manifest.dataset_uuid, "indices", column, "imported" + ktk_index.INDEX_SUFFIX
+    partition: list<string>]``) to the engine layout on the driver, as the
+    reference loads its indices (``IndexBase.load``)."""
+    field = next(f for f in manifest.schema.fields if f.name == column)
+    src = pq.read_table(
+        os.path.join(source_root, storage_key),
+        schema=pa.schema(
+            [(column, to_arrow_type(field.dataType)), ("partition", pa.list_(pa.string()))]
+        ),
     )
-    dest = os.path.join(manifest.root, rel)
-    (
-        spark.read.parquet("file:" + os.path.abspath(src))
-        .withColumnRenamed(column, "value")
-        .withColumnRenamed("partition", "partitions")
-        .write.mode("overwrite")
-        .parquet("file:" + os.path.abspath(dest))
-    )
-    return rel
+    return ktk_index.write_index(manifest, column, ktk_index.flatten_index(src))
 
 
 def import_kartothek_dataset(
@@ -297,7 +281,7 @@ def import_kartothek_dataset(
                 continue
             if isinstance(idx, str):
                 manifest.indices[column] = _import_external_index(
-                    spark, manifest, column, source_root, idx
+                    manifest, column, source_root, idx
                 )
             elif idx:
                 manifest.indices[column] = _import_embedded_index(
@@ -484,8 +468,6 @@ def export_kartothek_metadata(
     # it), partition keys included. Round-trip an empty typed table
     # through pandas so the embedded pandas metadata agrees with the
     # arrow field types.
-    from pyspark.sql.pandas.types import to_arrow_type
-
     typed = pa.schema(
         [
             pa.field(f.name, to_arrow_type(f.dataType), nullable=f.nullable)

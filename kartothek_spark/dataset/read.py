@@ -500,8 +500,6 @@ def read_dataset_dispatched(
     scan; each group's DataFrame then plans with the conjunction visible
     to the file pruner AND Catalyst (partition + row-group pruning per
     group)."""
-    from kartothek_spark.core.index import index_as_dataframe
-
     manifest = DatasetManifest.load(root, dataset_uuid)
     predicates = coerce_predicate_literals(predicates, manifest.schema)
     base_labels = set(dispatch_labels(spark, manifest, predicates))
@@ -515,14 +513,7 @@ def read_dataset_dispatched(
             for lbl in base_labels:
                 per_label[lbl][col] = manifest.partition_values(lbl)[col]
         elif col in manifest.indices:
-            rows = (
-                index_as_dataframe(spark, manifest, col)
-                .where(F.col("label").isin(list(base_labels)))
-                .collect()
-            )
-            values_by_label: dict[str, list] = {}
-            for r in rows:
-                values_by_label.setdefault(r.label, []).append(r.value)
+            values_by_label = ktk_index.index_values_by_label(manifest, col, base_labels)
             for lbl in base_labels:
                 per_label[lbl][col] = values_by_label.get(lbl, [])
         else:

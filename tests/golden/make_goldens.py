@@ -145,7 +145,7 @@ def make() -> None:
         pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), path)
 
     # secondary index: a parquet DIRECTORY of (value, partitions) — the
-    # engine's on-disk index layout (core/index.py _write_index)
+    # engine's on-disk index layout (core/index.py write_index)
     idx_dir = os.path.join(HERE, d["indices"]["name"])
     shutil.rmtree(idx_dir, ignore_errors=True)
     os.makedirs(idx_dir)

@@ -125,3 +125,31 @@ def test_bucket_pruning(spark, tmp_root):
     # full unpredicated roundtrip still matches (bucket col never leaks)
     full = read_table(spark, tmp_root, "lb")
     assert set(full.columns) == set(li.columns)
+
+
+def test_decimal_partition_key_predicates(spark, tmp_root):
+    """Decimal partition keys decode to ``Decimal``: an equal literal of
+    any scale finds the ``d=1.50`` directory, and a range literal compares
+    (it used to meet the key as a string and raise TypeError)."""
+    from decimal import Decimal
+
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [T.StructField("d", T.DecimalType(10, 2)), T.StructField("v", T.LongType())]
+    )
+    rows = [(Decimal("1.50"), 1), (Decimal("2.00"), 2), (Decimal("3.25"), 3), (Decimal("-4.00"), 4)]
+    store_dataframe_as_dataset(
+        spark, spark.createDataFrame(rows, schema), tmp_root, "dec", partition_on=["d"]
+    )
+
+    def vs(preds):
+        return sorted(r.v for r in read_table(spark, tmp_root, "dec", predicates=preds).collect())
+
+    assert vs([[("d", "==", Decimal("1.50"))]]) == [1]
+    assert vs([[("d", "==", Decimal("1.5"))]]) == [1]
+    assert vs([[("d", "in", [Decimal("1.5"), Decimal("-4")])]]) == [1, 4]
+    assert vs([[("d", ">", Decimal("2.00"))]]) == [3]
+    assert vs([[("d", "<=", Decimal("2"))], [("d", "==", Decimal("3.250"))]]) == [1, 2, 3, 4]
+    m = DatasetManifest.load(tmp_root, "dec")
+    assert len(m.query(predicates=[[("d", "==", Decimal("1.5"))]])) == 1

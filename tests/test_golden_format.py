@@ -100,14 +100,20 @@ def test_golden_dataset_reads_end_to_end(spark):
     assert [(r.name, r.v) for r in pruned.collect()] == [("bee", 3)]
 
 
-def test_golden_index_parquet_layout(spark):
+def test_golden_index_parquet_layout(spark, tmp_path):
     """The committed index parquet (directory of (value, partitions))
     keeps loading and serving index-pruned dispatch; newly-written
-    indices keep the same schema."""
+    indices keep the same schema. Runs on a copy of the golden tree, so
+    the new index is not written into the source tree."""
+    import shutil
+
     from kartothek_spark.core.index import build_index, load_index
     from kartothek_spark.dataset.read import dispatch_labels
 
-    m = DatasetManifest.load(GOLDEN_ROOT, "golden")
+    root = str(tmp_path)
+    shutil.copytree(os.path.join(GOLDEN_ROOT, "golden"), os.path.join(root, "golden"))
+    shutil.copy(os.path.join(GOLDEN_ROOT, "golden.by-dataset-metadata.json"), root)
+    m = DatasetManifest.load(root, "golden")
     idx = load_index(spark, m, "name")
     assert [f.name for f in idx.schema.fields] == ["value", "partitions"]
     got = {r.value: sorted(r.partitions) for r in idx.collect()}
@@ -121,14 +127,9 @@ def test_golden_index_parquet_layout(spark):
 
     # freshly-built index: same two-column layout (schema drift fails)
     rel = build_index(spark, m, "v")
-    fresh = spark.read.parquet(os.path.join(GOLDEN_ROOT, rel))
-    try:
-        assert [f.name for f in fresh.schema.fields] == ["value", "partitions"]
-        assert fresh.schema.fields[1].dataType.simpleString() == "array<string>"
-    finally:
-        import shutil
-
-        shutil.rmtree(os.path.join(GOLDEN_ROOT, rel), ignore_errors=True)
+    fresh = spark.read.parquet(os.path.join(root, rel))
+    assert [f.name for f in fresh.schema.fields] == ["value", "partitions"]
+    assert fresh.schema.fields[1].dataType.simpleString() == "array<string>"
 
 
 # ---- partition-list sidecar layout (core/manifest.py SIDECAR_THRESHOLD) ----
