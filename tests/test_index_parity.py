@@ -199,7 +199,8 @@ def layouts(spark, tmp_path_factory):
     # the former Spark build, one concurrent job per column
     spark_m = DatasetManifest.load(root, "par")
     with ThreadPoolExecutor(len(cols)) as pool:
-        spark_m.indices.update(zip(cols, pool.map(lambda col: spark_build_index(spark, spark_m, col), cols)))
+        rels = pool.map(lambda col: spark_build_index(spark, spark_m, col), cols)
+    spark_m.indices.update(zip(cols, rels))
     # the same (value -> labels) maps, imported as JSON-embedded indices
     label_of = {p: next(lbl for lbl in driver_m.partitions if lbl.startswith(f"p={p}/"))
                 for p in range(LABELS)}
@@ -219,9 +220,8 @@ def layouts(spark, tmp_path_factory):
     d = cols.index("d") + 1
     nan_labels = {label_of[r[0]] for r in rows
                   if isinstance(r[d], float) and math.isnan(r[d])}
-    zero_labels = {label_of[r[0]] for r in rows if r[d] == 0.0}
     layouts = {"driver": driver_m, "spark": spark_m, "embedded": embedded}
-    return layouts, nan_labels, zero_labels
+    return layouts, nan_labels
 
 
 def _cases(col: str, rng: random.Random) -> list[list[tuple]]:
@@ -241,30 +241,28 @@ def _cases(col: str, rng: random.Random) -> list[list[tuple]]:
     return cases
 
 
-def _negative_zero(value) -> bool:
+def _positive_zero(value):
+    """``value`` with every -0.0 as 0.0. Spark's row comparison holds them
+    equal, but on a -0.0 literal its parquet dictionary filter skips a row
+    group whose dictionary holds only 0.0, so the oracle is asked with 0.0."""
     if isinstance(value, list):
-        return any(_negative_zero(v) for v in value)
-    return isinstance(value, float) and value == 0.0 and math.copysign(1.0, value) < 0
+        return [_positive_zero(v) for v in value]
+    return 0.0 if isinstance(value, float) and value == 0.0 else value
 
 
-def _assert_parity(col, lits, want, got, nan_labels, zero_labels):
+def _assert_parity(col, lits, want, got, nan_labels):
     assert want <= got, (col, lits, sorted(want - got))
     if any(_conservative(v) for (_c, _op, v) in lits):
         return
     extra = got - want
     if col == "d":
-        # Spark compares -0.0 equal to 0.0 row by row, but on a -0.0
-        # literal its parquet reader skips an index file whose only zero
-        # is 0.0 — as in an index grouped by Spark's rules — so the
-        # oracle misses labels the lookup keeps
-        allowed = nan_labels | (zero_labels if any(_negative_zero(v) for (_c, _op, v) in lits) else set())
-        assert extra <= allowed, (col, lits, sorted(extra))
+        assert extra <= nan_labels, (col, lits, sorted(extra))
     else:
         assert not extra, (col, lits, sorted(extra))
 
 
 def test_index_lookup_matches_spark_query(spark, layouts):
-    manifests, nan_labels, zero_labels = layouts
+    manifests, nan_labels = layouts
     rng = random.Random(SEED)
     cases = []
     for manifest in manifests.values():
@@ -279,10 +277,15 @@ def test_index_lookup_matches_spark_query(spark, layouts):
     # the oracle's Spark jobs run concurrently: the job floor, not the
     # tiny index, is what they cost
     with ThreadPoolExecutor(8) as pool:
-        wants = list(pool.map(lambda case: oracle_query_index_labels(spark, *case), cases))
+        wants = list(pool.map(
+            lambda case: oracle_query_index_labels(
+                spark, case[0], case[1], [(c, op, _positive_zero(v)) for (c, op, v) in case[2]]
+            ),
+            cases,
+        ))
     for (manifest, col, lits), want in zip(cases, wants):
         got = query_index_labels(spark, manifest, col, lits)
-        _assert_parity(col, lits, want, got, nan_labels, zero_labels)
+        _assert_parity(col, lits, want, got, nan_labels)
 
 
 def test_golden_index_lookup_matches_spark_query(spark):
@@ -369,10 +372,6 @@ def _maintain(spark, root, uuid_, cols, steps, start="spark"):
     return out
 
 
-def _frame(spark, rows, schema):
-    return spark.createDataFrame(rows, schema)
-
-
 def test_index_maintenance_matches_spark(spark, tmp_path):
     """Build, append, replace (removed labels) and a delete that empties
     values, on every value type, starting from a Spark-written index
@@ -383,15 +382,15 @@ def test_index_maintenance_matches_spark(spark, tmp_path):
         + [T.StructField(c, t) for c, (t, _p, _x) in COLUMNS.items()]
     )
     store_dataframe_as_dataset(
-        spark, _frame(spark, _rows(random.Random(SEED + 1)), schema), root, "mnt",
+        spark, spark.createDataFrame(_rows(random.Random(SEED + 1)), schema), root, "mnt",
         partition_on=["p"],
     )
     cols = list(COLUMNS)
     appended = [tuple([100] + [APPEND[c][k] for c in cols]) for k in range(2)]
     replaced = [r for r in _rows(random.Random(SEED + 2)) if r[0] == 3]
     steps = [
-        (_frame(spark, appended, schema), None, {}),
-        (_frame(spark, replaced, schema), [{"p": 3}], {}),
+        (spark.createDataFrame(appended, schema), None, {}),
+        (spark.createDataFrame(replaced, schema), [{"p": 3}], {}),
         (None, [{"p": 100}], {}),
     ]
     ms = _maintain(spark, root, "mnt", cols, steps)
@@ -413,52 +412,53 @@ def test_index_maintenance_layouts_match_spark(spark, tmp_path):
     base = schema(("p", L), ("a", L))
     evolved = schema(("p", L), ("a", L), ("b", S))
     store_dataframe_as_dataset(
-        spark, _frame(spark, [(0, 1), (1, 2)], base), root, "evo", partition_on=["p"]
+        spark, spark.createDataFrame([(0, 1), (1, 2)], base), root, "evo", partition_on=["p"]
     )
     update_dataset(
-        spark, _frame(spark, [(1, 3, "x"), (2, 4, None)], evolved), root, "evo",
+        spark, spark.createDataFrame([(1, 3, "x"), (2, 4, None)], evolved), root, "evo",
         schema_evolution=True,
     )
     _maintain(spark, root, "evo", ["b"], [
-        (_frame(spark, [(0, 5, "x"), (3, 6, "y")], evolved), None, {}),
-        (_frame(spark, [(1, 7, "z")], evolved), [{"p": 1}], {}),
+        (spark.createDataFrame([(0, 5, "x"), (3, 6, "y")], evolved), None, {}),
+        (spark.createDataFrame([(1, 7, "z")], evolved), [{"p": 1}], {}),
     ], start="driver")
 
     # an int file under the long column w
     store_dataframe_as_dataset(
-        spark, _frame(spark, [(0, 2**31 - 1), (1, -5)], schema(("p", L), ("w", I))),
+        spark, spark.createDataFrame([(0, 2**31 - 1), (1, -5)], schema(("p", L), ("w", I))),
         root, "wide", partition_on=["p"],
     )
     wide = schema(("p", L), ("w", L))
     update_dataset(
-        spark, _frame(spark, [(1, 2**40), (2, -5)], wide), root, "wide", schema_evolution=True
+        spark, spark.createDataFrame([(1, 2**40), (2, -5)], wide), root, "wide",
+        schema_evolution=True,
     )
     _maintain(spark, root, "wide", ["w"], [
-        (_frame(spark, [(0, 2**31 - 1), (3, 2**41)], wide), [{"p": 1}], {}),
+        (spark.createDataFrame([(0, 2**31 - 1), (3, 2**41)], wide), [{"p": 1}], {}),
     ])
 
     # partition-key indices, a decimal key among them
     keyed = schema(("p", L), ("k", S), ("d", T.DecimalType(10, 2)), ("v", L))
     store_dataframe_as_dataset(
         spark,
-        _frame(spark, [(0, "x", Decimal("1.50"), 1), (1, "y", Decimal("-2.00"), 2),
+        spark.createDataFrame([(0, "x", Decimal("1.50"), 1), (1, "y", Decimal("-2.00"), 2),
                        (1, "x", Decimal("1.50"), 3)], keyed),
         root, "keyed", partition_on=["p", "k", "d"],
     )
     _maintain(spark, root, "keyed", ["k", "p", "d"], [
-        (_frame(spark, [(2, "z", Decimal("3.25"), 4)], keyed), None, {}),
+        (spark.createDataFrame([(2, "z", Decimal("3.25"), 4)], keyed), None, {}),
         (None, [{"k": "x"}], {}),
     ])
 
     # an attached external root (absolute payload paths, percent codec)
     ext = str(tmp_path / "ext")
     ext_schema = schema(("p", L), ("v", L), ("s", S))
-    _frame(spark, [(0, 1, "a"), (1, 2, "b"), (1, 3, None)], ext_schema).write.partitionBy(
+    spark.createDataFrame([(0, 1, "a"), (1, 2, "b"), (1, 3, None)], ext_schema).write.partitionBy(
         "p"
     ).parquet("file:" + ext)
     attach_dataset(spark, root, "att", ext, partition_keys=["p"])
     _maintain(spark, root, "att", ["v", "s"], [
-        (_frame(spark, [(2, 4, "c"), (0, 1, "a")], ext_schema), None, {}),
+        (spark.createDataFrame([(2, 4, "c"), (0, 1, "a")], ext_schema), None, {}),
         (None, [{"p": 1}], {}),
     ])
 
@@ -468,10 +468,10 @@ def test_index_maintenance_layouts_match_spark(spark, tmp_path):
             (1, 2, "b", None)]
     for fmt in ("csv", "jsonl", "orc"):
         store_dataframe_as_dataset(
-            spark, _frame(spark, rows, fmt_schema), root, fmt, partition_on=["p"],
+            spark, spark.createDataFrame(rows, fmt_schema), root, fmt, partition_on=["p"],
             table_format=fmt,
         )
         _maintain(spark, root, fmt, ["v", "s", "t"], [
-            (_frame(spark, [(2, 9, "c", dt.date(1999, 12, 31))], fmt_schema), None, {}),
-            (_frame(spark, [(1, 5, "d", None)], fmt_schema), [{"p": 1}], {}),
+            (spark.createDataFrame([(2, 9, "c", dt.date(1999, 12, 31))], fmt_schema), None, {}),
+            (spark.createDataFrame([(1, 5, "d", None)], fmt_schema), [{"p": 1}], {}),
         ], start="driver")
