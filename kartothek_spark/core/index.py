@@ -267,13 +267,20 @@ def update_index(
 
 
 def index_values_by_label(
-    manifest: "DatasetManifest", column: str, labels: Iterable[str]
+    manifest: "DatasetManifest", column: str, labels: Iterable[str],
+    literals: Sequence[tuple] = (),
 ) -> dict[str, list]:
     """label → the indexed values it holds, for ``labels``, read on the
-    driver; values are the Python objects a Spark ``collect`` returns."""
-    dt, _vtype = _value_types(manifest, column)
+    driver; values are the Python objects a Spark ``collect`` returns.
+    With ``literals`` (one conjunction's restriction on this column) only
+    the values that may satisfy them, judged as
+    :func:`query_index_labels` judges them."""
+    dt, vtype = _value_types(manifest, column)
     pairs = flatten_index(_index_dataset(manifest, column))
     pairs = pairs.filter(pc.is_in(pairs["label"], value_set=pa.array(list(labels), pa.string())))
+    expr = _conjunction_filter(dt, vtype, literals)
+    if expr is not None:
+        pairs = pairs.filter(expr)
     if isinstance(dt, T.TimestampType):
         # Spark collects timestamps as naive local datetimes
         values = [dt.fromInternal(v) for v in pairs["value"].cast(pa.int64()).to_pylist()]
@@ -361,6 +368,18 @@ def _literal_filter(dt: T.DataType, arrow_type, op: str, literal: Any):
         return None
 
 
+def _conjunction_filter(dt: T.DataType, arrow_type, literals: Sequence[tuple]):
+    """Arrow filter on ``value`` keeping every value that may satisfy all
+    ``literals``, or None when none of them prunes: literals not shown
+    exact are left out, and on float columns a NaN value is always kept."""
+    conds = [_literal_filter(dt, arrow_type, op, v) for (_c, op, v) in literals]
+    conds = [c for c in conds if c is not None]
+    expr = reduce(operator.and_, conds) if conds else None
+    if expr is not None and isinstance(dt, (T.FloatType, T.DoubleType)):
+        expr = expr | pc.is_nan(pc.field("value"))
+    return expr
+
+
 def query_index_labels(
     spark: SparkSession,
     manifest: "DatasetManifest",
@@ -377,11 +396,7 @@ def query_index_labels(
     Spark value is not shown exact does not prune, and on float columns a
     NaN value is always kept."""
     dt, vtype = _value_types(manifest, column)
-    conds = [_literal_filter(dt, vtype, op, v) for (_c, op, v) in literals]
-    conds = [c for c in conds if c is not None]
-    expr = reduce(operator.and_, conds) if conds else None
-    if expr is not None and isinstance(dt, (T.FloatType, T.DoubleType)):
-        expr = expr | pc.is_nan(pc.field("value"))
+    expr = _conjunction_filter(dt, vtype, literals)
     hits = _index_dataset(manifest, column).to_table(columns=["partitions"], filter=expr).column("partitions")
     return set(pc.unique(pc.list_flatten(hits)).to_pylist())
 

@@ -121,6 +121,7 @@ def collect_file_stats(
     def stats_rows(it):
         import datetime as _dt
 
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
         def render(v):
@@ -147,7 +148,13 @@ def collect_file_stats(
                     if st is None or not st.has_min_max:
                         ok = False
                         break
-                    mn, mx = render(st.min), render(st.max)
+                    try:
+                        mn, mx = render(st.min), render(st.max)
+                    except pa.ArrowNotImplementedError:
+                        # a physical type pyarrow cannot decode (the
+                        # fixed-length bytes of a Spark-written decimal):
+                        # no stats, so the column never skips this file
+                        mn = mx = None
                     if mn is None or mx is None:
                         ok = False
                         break

@@ -22,8 +22,9 @@ metapartition.py:735-884 in /root/reference) Spark-first:
 
 from __future__ import annotations
 
+import itertools
 import os
-from typing import Any, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,6 +36,7 @@ from kartothek_spark.core.predicates import (
     Predicates,
     check_predicates,
     coerce_predicate_literals,
+    evaluate_conjunction_py,
     predicates_to_column,
     validate_predicate_types,
 )
@@ -506,36 +508,33 @@ def read_dataset_dispatched(
     if not base_labels:
         return
 
-    # group values per label, metadata-only
-    per_label: dict[str, dict[str, Any]] = {lbl: {} for lbl in base_labels}
     for col in dispatch_by:
-        if col in manifest.partition_keys:
-            for lbl in base_labels:
-                per_label[lbl][col] = manifest.partition_values(lbl)[col]
-        elif col in manifest.indices:
-            values_by_label = ktk_index.index_values_by_label(manifest, col, base_labels)
-            for lbl in base_labels:
-                per_label[lbl][col] = values_by_label.get(lbl, [])
-        else:
+        if col not in manifest.partition_keys and col not in manifest.indices:
             raise ValueError(
                 f"dispatch_by column {col!r} is neither a partition key nor "
                 "secondary-indexed — group discovery would need a data scan"
             )
 
-    # expand to (group tuple) -> labels; an indexed column can map one
-    # label to several groups (the per-group conjunction re-filters rows)
-    groups: dict[tuple, set[str]] = {}
-
-    def _expand(lbl: str, cols: list[str], acc: tuple) -> None:
-        if not cols:
-            groups.setdefault(acc, set()).add(lbl)
-            return
-        v = per_label[lbl][cols[0]]
-        for value in v if isinstance(v, list) else [v]:
-            _expand(lbl, cols[1:], acc + (value,))
-
-    for lbl in base_labels:
-        _expand(lbl, list(dispatch_by), ())
+    # group values per label, metadata-only, one conjunction at a time: a
+    # group is kept when its values may satisfy some conjunction (the
+    # reference filters index values by the predicate the same way). An
+    # indexed column can map one label to several groups; the per-group
+    # conjunction re-filters rows.
+    groups: set[tuple] = set()
+    for conj in predicates or [[]]:
+        per_label: dict[str, list[list]] = {lbl: [] for lbl in base_labels}
+        for col in dispatch_by:
+            lits = [lit for lit in conj if lit[0] == col]
+            if col in manifest.partition_keys:
+                for lbl in base_labels:
+                    v = manifest.partition_values(lbl)[col]
+                    per_label[lbl].append([v] if evaluate_conjunction_py(lits, {col: v}) else [])
+            else:
+                values_by_label = ktk_index.index_values_by_label(manifest, col, base_labels, lits)
+                for lbl in base_labels:
+                    per_label[lbl].append(values_by_label.get(lbl, []))
+        for values in per_label.values():
+            groups.update(itertools.product(*values))
 
     for values in sorted(groups):
         conj = [(c, "==", v) for c, v in zip(dispatch_by, values)]

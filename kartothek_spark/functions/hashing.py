@@ -97,14 +97,6 @@ def shingles_from_tokens(toks: Column, n: int) -> Column:
     return F.array_distinct(bind_once(toks, sh))
 
 
-def word_shingles(col: Column | str, n: int) -> Column:
-    """Distinct n-word shingles (space-joined) of the token stream.
-    Column-in/Column-out convenience; prefer a staged
-    ``select(tokens(...)).select(shingles_from_tokens(...))`` in hot paths
-    (see :func:`shingles_from_tokens`)."""
-    return shingles_from_tokens(tokens(col), n)
-
-
 def word_shingles_sql(expr: str, n: int) -> str:
     toks = tokens_sql(expr)
     return (

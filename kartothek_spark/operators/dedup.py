@@ -178,14 +178,36 @@ def minhash_lsh_pairs(
     Output: (id_a, id_b, jaccard) with id_a < id_b and
     jaccard >= threshold.
     """
+    base, _reps, key_pairs = minhash_key_pairs(
+        df, text_col, id_col, threshold, num_hashes, bands, max_band_bucket, lifecycle
+    )
+    return finish(member_pairs(base.select("__id", "__ck"), key_pairs, threshold), lifecycle, base)
+
+
+def minhash_key_pairs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    threshold: float,
+    num_hashes: int,
+    bands: int,
+    max_band_bucket: int | None,
+    lifecycle: str,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The content-key half of :func:`minhash_lsh_pairs`: ``(base, reps,
+    key_pairs)`` with ``base``/``reps`` from :func:`_minhash_side` (``base``
+    pinned under ``lifecycle``, released by the caller) and ``key_pairs``
+    the verified ``(ck_a, ck_b, jaccard)`` relation between distinct
+    content keys (``ck_a`` the key of the smaller representative id). The
+    persisted MinHash index (``operators/dedup_index.py``) builds from it
+    with ``max_band_bucket=None``."""
     rows = num_hashes // bands
     # base / rep-collapse / banding come from the SHARED _minhash_side /
     # _banded helpers (one copy of the skew-guard machinery for the
     # single-corpus and cross-corpus operators — see their docstrings for
     # the staging, content-key, and hashed-shingle rationale)
-    base, sig = _minhash_side(df, text_col, id_col, num_hashes, lifecycle)
-    members = base.select("__id", "__ck")
-    banded = _cap_band_buckets(_banded(sig, bands, rows), max_band_bucket)
+    base, reps = _minhash_side(df, text_col, id_col, num_hashes, lifecycle)
+    banded = _cap_band_buckets(_banded(reps, bands, rows), max_band_bucket)
 
     left = banded.alias("l")
     right = banded.alias("r")
@@ -204,7 +226,7 @@ def minhash_lsh_pairs(
     # representative id — arrays travel only for candidate rows
     a = base.select(F.col("__id").alias("id_a"), F.col("__ck").alias("ck_a"), F.col("__sh").alias("sh_a"))
     b = base.select(F.col("__id").alias("id_b"), F.col("__ck").alias("ck_b"), F.col("__sh").alias("sh_b"))
-    verified_reps = (
+    key_pairs = (
         cand.join(a, "id_a")
         .join(b, "id_b")
         .withColumn(
@@ -218,12 +240,18 @@ def minhash_lsh_pairs(
         .where(F.col("jaccard") >= threshold)
         .select("ck_a", "ck_b", "jaccard")
     )
+    return base, reps, key_pairs
 
-    # expand verified representative pairs to all member cross-pairs
+
+def member_pairs(members: DataFrame, key_pairs: DataFrame, threshold: float) -> DataFrame:
+    """Document pairs ``(id_a, id_b, jaccard)``, ``id_a < id_b``, of the
+    ``(__id, __ck)`` ``members``: every member cross pair of each verified
+    key pair, plus every pair inside one content key (identical shingle
+    sets, jaccard exactly 1)."""
     ma = members.select(F.col("__ck").alias("ck_a"), F.col("__id").alias("ia"))
     mb = members.select(F.col("__ck").alias("ck_b"), F.col("__id").alias("ib"))
     cross = (
-        verified_reps.join(ma, "ck_a")
+        key_pairs.join(ma, "ck_a")
         .join(mb, "ck_b")
         .select(
             F.least("ia", "ib").alias("id_a"),
@@ -244,7 +272,7 @@ def minhash_lsh_pairs(
     )
     if threshold > 1.0:
         intra = intra.where(F.lit(False))
-    return finish(cross.unionByName(intra), lifecycle, base)
+    return cross.unionByName(intra)
 
 
 def _minhash_side_sql(
@@ -1614,6 +1642,21 @@ FROM l JOIN r
 # cross-corpus MinHash pairs / fuzzy decontamination
 # ---------------------------------------------------------------------------
 
+def minhash_base(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """``(__id, __sh, __ck)``: the per-document staging of every MinHash
+    operator — hashed shingles and the token-stream content key of each
+    non-null text (see :func:`_minhash_side`)."""
+    return (
+        df.where(F.col(text_col).isNotNull())
+        .select(F.col(id_col).alias("__id"), tokens(F.col(text_col)).alias("__t"))
+        .select(
+            "__id",
+            hashed_shingles(F.col("__t"), MINHASH_SHINGLE_WORDS).alias("__sh"),
+            F.md5(F.concat_ws("\x01", "__t")).alias("__ck"),
+        )
+    )
+
+
 def _minhash_side(
     df: DataFrame, text_col: str, id_col: str, num_hashes: int,
     lifecycle: str = "checkpoint",
@@ -1640,17 +1683,7 @@ def _minhash_side(
     (ck, id, num_hashes longs), never shingle arrays; ``F.first`` is safe
     because every row in a ``__ck`` group carries the same token stream,
     hence the same signature, by construction."""
-    base = (
-        scale_out(df)
-        .where(F.col(text_col).isNotNull())
-        .select(F.col(id_col).alias("__id"), tokens(F.col(text_col)).alias("__t"))
-        .select(
-            "__id",
-            hashed_shingles(F.col("__t"), MINHASH_SHINGLE_WORDS).alias("__sh"),
-            F.md5(F.concat_ws("\x01", "__t")).alias("__ck"),
-        )
-    )
-    base = pin(base, lifecycle)
+    base = pin(minhash_base(scale_out(df), text_col, id_col), lifecycle)
     sigd = base.select("__id", "__ck", minhash_sig_expr("__sh", num_hashes).alias("__sig"))
     reps = sigd.groupBy("__ck").agg(
         F.min("__id").alias("__id"), F.first("__sig").alias("__sig")

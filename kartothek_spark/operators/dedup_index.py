@@ -32,28 +32,63 @@ could never equal a capped batch run — instead the index keeps full
 recall and callers who need the blowup bound cap at query time on the
 emitted pair stream.
 
-Per-sync cost is O(new docs + candidate pairs): signatures are computed
-for new documents only, the banding join is (new content keys) ×
-(all content keys) on (band, key), and exact-Jaccard verification
-re-reads ONLY the candidate partner representatives from the corpus
-(a semi-join pruned scan, never a full pass).
+A build or refresh runs the batch operator's key-level half
+(:func:`~kartothek_spark.operators.dedup.minhash_key_pairs`, no bucket
+cap) over the pinned snapshot, distributed. An incremental sync costs
+O(new docs + candidate pairs): Spark runs four filtered scans, each one
+``toArrow()`` job, and the driver joins the content keys:
+
+1. the delta's ``(doc_id, ck, shingles, sig)`` from the changes feed;
+2. the ``__ckpairs`` rows with either key in the delta (read
+   symmetrically, whatever orientation an older build stored);
+3. the index rows whose ``ck`` is a delta key or a partner key from 2, or
+   whose band key equals, in the same band, a band key of a delta key —
+   all members of a key share its signature, so one scan returns them all;
+4. one shingle set per candidate key outside the delta, by id.
+
+The driver finds the fresh keys (delta keys the index lacks) and their
+candidate keys, verifies the exact Jaccard, expands the cross, inherited
+and intra pairs, and commits ``__ckpairs`` and then the cursor-carrying
+index from its own rows. Its memory holds the delta's rows, the index
+rows of the delta keys and the candidate keys, the stored key pairs of
+the delta keys and one shingle set per candidate key; the whole index is
+never held on the driver. Every corpus read (1 and 4) comes from the
+pinned :class:`~kartothek_spark.dataset.sync.SyncPass`, and the index
+carrying the cursor commits last.
+
+The driver's Jaccard must equal Spark's ``round(|∩|/|∪|, 6)`` bit for
+bit: inherited pairs carry the Jaccard of whichever side verified the key
+pair. :func:`_jaccard` rounds half-up at the ratio's shortest decimal
+rendering, as Spark rounds ``BigDecimal(Double.toString(x))``; Python's
+``round(x, 6)`` rounds the binary value half-even and differs on 416 of
+the 721,800 ratios p/q with 0 <= p <= q <= 1200
+(``tests/test_dedup_index.py`` checks them all against Spark).
 """
 
 from __future__ import annotations
 
+from collections import defaultdict
+from decimal import ROUND_HALF_UP, Decimal
+from functools import reduce
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kartothek_spark.functions.hashing import tokens
-from kartothek_spark.operators._util import scale_out
+from kartothek_spark.operators._util import finish
 from kartothek_spark.operators.dedup import (
     MINHASH_BANDS,
     MINHASH_NUM_HASHES,
     MINHASH_SHINGLE_WORDS,
+    member_pairs,
+    minhash_base,
+    minhash_key_pairs,
+    minhash_sig_expr,
 )
 
 _INDEX_KEY = "ktk_minhash_index"
+_MICRO = Decimal("1e-6")
 
 _PAIR_SCHEMA = T.StructType(
     [
@@ -68,55 +103,16 @@ def _pairs_suffix(index_uuid: str) -> str:
     return f"{index_uuid}__ckpairs"
 
 
-def _shingled(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(__id, __sh, __ck) — identical staging to the batch operator so the
-    incremental pair set is bit-identical to ``minhash_lsh_pairs``;
-    ``__sh`` carries HASHED shingles (dedup.hashed_shingles)."""
-    from kartothek_spark.operators.dedup import hashed_shingles
-
-    return (
-        df.where(F.col(text_col).isNotNull())
-        .select(F.col(id_col).alias("__id"), tokens(F.col(text_col)).alias("__t"))
-        .select(
-            "__id",
-            hashed_shingles(F.col("__t"), MINHASH_SHINGLE_WORDS).alias("__sh"),
-            # token-stream content key, same rationale as the batch
-            # operator (dedup.py minhash_lsh_pairs): refines the shingle
-            # set, 3× cheaper than hashing the shingle concat
-            F.md5(F.concat_ws("\x01", "__t")).alias("__ck"),
-        )
-    )
+def _jaccard(inter: int, union: int) -> float:
+    """Spark's ``round(inter / union, 6)`` on the driver, bit for bit."""
+    return float(Decimal(repr(inter / union)).quantize(_MICRO, ROUND_HALF_UP))
 
 
-def _signatures(reps: DataFrame, num_hashes: int) -> DataFrame:
-    """(__ck, sig) from (__ck, __sh): ONE md5 per shingle via the
-    zero-shuffle per-row fold shared with the batch operator
-    (:func:`kartothek_spark.operators.dedup.minhash_sig_expr`)."""
-    from kartothek_spark.operators.dedup import minhash_sig_expr
-
-    return reps.select("__ck", minhash_sig_expr("__sh", num_hashes).alias("sig"))
-
-
-def _banded(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """(__ck, band, key) — band key is the '_'-joined signature slice,
-    identical to the batch operator's rendering."""
-    rows = num_hashes // bands
-    return sigs.select(
-        "__ck",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            "_", *[F.col("sig")[j].cast("string") for j in range(b * rows, (b + 1) * rows)]
-                        ).alias("key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("__ck", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+def _band_keys(sig, bands: int) -> list[str]:
+    """The ``'_'``-joined signature slice of each band, as
+    :func:`~kartothek_spark.operators.dedup._banded` renders it."""
+    rows = len(sig) // bands
+    return ["_".join(map(str, sig[b * rows:(b + 1) * rows])) for b in range(bands)]
 
 
 def sync_minhash_index(
@@ -134,8 +130,9 @@ def sync_minhash_index(
     """Advance the index to the corpus's live snapshot and return the NEW
     near-duplicate pairs ``(id_a, id_b, jaccard)`` — exactly the pairs
     with at least one side appended since the previous sync. The result
-    is materialized (checkpointed) before the index datasets are
-    committed, so it is stable against the commit.
+    is computed before the index datasets are committed (a checkpoint
+    after a build, the driver's own rows after an incremental sync), so
+    it is stable against the commit.
 
     First call builds the index from the full corpus and returns all
     pairs (== the batch operator's output). If corpus partitions were
@@ -143,6 +140,8 @@ def sync_minhash_index(
     and the full live pair set is re-emitted (``refresh`` — consumers
     should replace, not append, their derived duplicate table; same
     contract as :func:`~kartothek_spark.dataset.sync.sync_derived_dataset`).
+    An incremental sync joins the new documents' content keys on the
+    driver (module docstring).
 
     The protocol is :func:`kartothek_spark.dataset.sync.cursor_step`:
     corpus reads come from the snapshot the cursor records, and
@@ -150,7 +149,7 @@ def sync_minhash_index(
     sync that fails between the two raises and keeps the cursor, so the
     retry emits the whole delta's pairs; the key pairs it re-sends to
     ``__ckpairs`` are value-neutral (inherited pairs and the returned
-    pairs are ``distinct()``)."""
+    pairs are distinct)."""
     from kartothek_spark.dataset.sync import cursor_step
 
     params = {
@@ -160,195 +159,173 @@ def sync_minhash_index(
         "bands": bands,
         "shingle_words": MINHASH_SHINGLE_WORDS,
     }
-
-    def advance(p) -> DataFrame:
-        return _advance(p, index_root, index_uuid, text_col, id_col, threshold, num_hashes, bands)
-
+    args = (index_root, index_uuid, text_col, id_col, threshold, num_hashes, bands)
     _mode, _version, pairs = cursor_step(
         spark, _INDEX_KEY, params, corpus_root, corpus_uuid, index_root,
-        (_pairs_suffix(index_uuid), index_uuid), advance, advance,
+        (_pairs_suffix(index_uuid), index_uuid),
+        lambda p: _build(p, *args), lambda p: _sync(p, *args),
     )
     return pairs if pairs is not None else spark.createDataFrame([], _PAIR_SCHEMA)
 
 
-def _advance(p, index_root, index_uuid, text_col, id_col, threshold, num_hashes, bands):
-    """The sync's build and incremental body (a
-    :class:`~kartothek_spark.dataset.sync.SyncPass` ``p``)."""
+def _build(p, index_root, index_uuid, text_col, id_col, threshold, num_hashes, bands):
+    """Initial build or refresh over the pinned snapshot: the batch
+    operator's key pairs and member expansion, distributed."""
+    from kartothek_spark.dataset.write import store_dataframe_as_dataset
+
+    base, reps, key_pairs = minhash_key_pairs(
+        p.full(), text_col, id_col, threshold, num_hashes, bands, None, "checkpoint"
+    )
+    # each frame below feeds a commit and (key pairs) the returned pairs:
+    # materialize once, before the pinned base is released
+    key_pairs = key_pairs.select(
+        F.least("ck_a", "ck_b").alias("ck_a"), F.greatest("ck_a", "ck_b").alias("ck_b"), "jaccard"
+    ).localCheckpoint(eager=True)
+    members = base.select("__id", "__ck")
+    rows = members.join(reps.select("__ck", "__sig"), "__ck").select(
+        F.col("__id").alias("doc_id"), F.col("__ck").alias("ck"), F.col("__sig").alias("sig")
+    ).localCheckpoint(eager=True)
+    pairs = finish(member_pairs(members, key_pairs, threshold), "checkpoint", base)
+
+    def store(uuid: str, df: DataFrame):
+        return lambda meta: store_dataframe_as_dataset(p.spark, df, index_root, uuid, metadata=meta)
+
+    pairs_uuid = _pairs_suffix(index_uuid)
+    p.commit({pairs_uuid: store(pairs_uuid, key_pairs), index_uuid: store(index_uuid, rows)})
+    return pairs
+
+
+def _sync(p, index_root, index_uuid, text_col, id_col, threshold, num_hashes, bands):
+    """Incremental sync: four filtered scans, the key join on the driver
+    (module docstring)."""
     from kartothek_spark.dataset.read import read_table
-    from kartothek_spark.dataset.write import store_dataframe_as_dataset, update_dataset
+    from kartothek_spark.dataset.write import update_dataset
 
     spark = p.spark
     pairs_uuid = _pairs_suffix(index_uuid)
-    incremental = p.mode == "incremental"
-    if incremental:
-        new_docs = p.changes()
-        old_rows = read_table(spark, index_root, index_uuid)
-        old_ckpairs = read_table(spark, index_root, pairs_uuid)
-    else:
-        new_docs = p.full()
-        old_rows = None
-        old_ckpairs = None
 
-    new_base = _shingled(scale_out(new_docs), text_col, id_col).persist()
-    new_members = new_base.select("__id", "__ck")
-    new_reps = new_base.groupBy("__ck").agg(
-        F.min("__id").alias("__rid"), F.first("__sh").alias("__sh")
-    ).persist()
-    new_sigs = _signatures(new_reps, num_hashes)
-
-    if old_rows is not None:
-        old_members = old_rows.select(F.col("doc_id").alias("__id"), F.col("ck").alias("__ck"))
-        old_sigs = old_rows.groupBy("ck").agg(F.first("sig").alias("sig")).select(
-            F.col("ck").alias("__ck"), "sig"
-        )
-        # only content keys never seen before enter the banding join —
-        # a new member of a known key inherits the key's stored pairs
-        fresh_sigs = new_sigs.join(old_sigs.select("__ck"), "__ck", "left_anti").persist()
-        all_members = old_members.unionByName(new_members)
-        all_sigs = old_sigs.unionByName(fresh_sigs)
-    else:
-        fresh_sigs = new_sigs.persist()
-        all_members = new_members
-        all_sigs = fresh_sigs
-
-    # ---- cross-key candidates: band(fresh) ⋈ band(all), key-level ----
-    lb = _banded(fresh_sigs, num_hashes, bands).alias("l")
-    rb = _banded(all_sigs, num_hashes, bands).alias("r")
-    cand = (
-        lb.join(
-            rb,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.__ck") != F.col("r.__ck")),
-        )
+    # 1. the delta, per document
+    delta = (
+        minhash_base(p.changes(), text_col, id_col)
         .select(
-            F.least(F.col("l.__ck"), F.col("r.__ck")).alias("ck_a"),
-            F.greatest(F.col("l.__ck"), F.col("r.__ck")).alias("ck_b"),
+            F.col("__id").alias("doc_id"),
+            F.col("__ck").alias("ck"),
+            "__sh",
+            minhash_sig_expr("__sh", num_hashes).alias("sig"),
         )
-        .distinct()
-        # three consumers (candidate-ck list, missing-rep list, verify
-        # join) — cut the banding join's lineage so it runs once
-        .localCheckpoint(eager=True)
+        .toArrow()
     )
+    members: dict[str, set] = defaultdict(set)  # ck -> ids, indexed and new
+    new: dict[str, set] = defaultdict(set)  # ck -> the delta's ids
+    sig_of: dict[str, list] = {}
+    sh_of: dict[str, set] = {}
+    for i, ck, sh, sig in zip(*(delta.column(c).to_pylist() for c in ("doc_id", "ck", "__sh", "sig"))):
+        new[ck].add(i)
+        members[ck].add(i)
+        sig_of[ck] = sig
+        sh_of[ck] = set(sh)
 
-    # ---- exact-Jaccard verification on candidate representatives only ----
-    # representative = min doc id per ck; its shingle array is re-derived
-    # from the corpus via a candidate-pruned semi-join scan (new-ck reps
-    # short-circuit through new_reps, no corpus read for them)
-    if not incremental:
-        # build: every candidate rep is new — no corpus refetch
-        shingle_sets = new_reps.select("__ck", "__sh")
-    else:
-        all_reps = all_members.groupBy("__ck").agg(F.min("__id").alias("__rid"))
-        cand_cks = cand.select(F.col("ck_a").alias("__ck")).unionByName(
-            cand.select(F.col("ck_b").alias("__ck"))
-        ).distinct()
-        need = all_reps.join(cand_cks, "__ck")
-        have_new = need.join(
-            new_reps.select("__ck", "__sh"), "__ck", "inner"
-        ).select("__ck", "__sh")
-        missing_ids = need.join(new_reps.select("__ck"), "__ck", "left_anti").select(
-            F.col("__rid").alias(id_col)
+    stored: list[tuple] = []
+    key_pairs: list[tuple] = []
+    if new:
+        keys = sorted(new)
+        # 2. stored key pairs touching the delta, either orientation
+        stored = _rows(
+            read_table(spark, index_root, pairs_uuid)
+            .where(F.col("ck_a").isin(keys) | F.col("ck_b").isin(keys)),
+            ("ck_a", "ck_b", "jaccard"),
         )
-        refetched = _shingled(
-            p.full().join(missing_ids, id_col, "left_semi"), text_col, id_col
-        ).select("__ck", "__sh")
-        shingle_sets = have_new.unionByName(refetched)
-
-    sa = shingle_sets.select(F.col("__ck").alias("ck_a"), F.col("__sh").alias("sh_a"))
-    sb = shingle_sets.select(F.col("__ck").alias("ck_b"), F.col("__sh").alias("sh_b"))
-    fresh_ckpairs = (
-        cand.join(sa, "ck_a")
-        .join(sb, "ck_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                / F.size(F.array_union("sh_a", "sh_b")).cast("double"),
-                6,
-            ),
+        partners = {ck for a, b, _ in stored for ck in (a, b)} - set(keys)
+        # 3. index rows of the delta and partner keys and of every key
+        # sharing a band key with a delta key, band by band
+        by_band = zip(*(_band_keys(sig_of[ck], bands) for ck in keys))
+        rows = num_hashes // bands
+        near = [
+            F.concat_ws("_", *[F.col("sig")[j].cast("string") for j in range(b * rows, (b + 1) * rows)])
+            .isin(sorted(set(band_keys)))
+            for b, band_keys in enumerate(by_band)
+        ]
+        indexed = read_table(spark, index_root, index_uuid).where(
+            reduce(lambda x, y: x | y, near, F.col("ck").isin(keys + sorted(partners)))
         )
-        .where(F.col("jaccard") >= threshold)
-        .select("ck_a", "ck_b", "jaccard")
-        # materialize once: the banding join + corpus candidate re-read +
-        # verify chain above feeds BOTH the returned pairs and the ckpairs
-        # dataset commit — without the cut it would run twice more
-        .localCheckpoint(eager=True)
-    )
+        fresh = set(keys)
+        for i, ck, sig in _rows(indexed, ("doc_id", "ck", "sig")):
+            members[ck].add(i)
+            sig_of.setdefault(ck, sig)
+            fresh.discard(ck)
 
-    # ---- expand key-level pairs to member pairs (new side required) ----
-    ma = all_members.select(F.col("__ck").alias("ck_a"), F.col("__id").alias("ia"))
-    mb = all_members.select(F.col("__ck").alias("ck_b"), F.col("__id").alias("ib"))
-    cross_fresh = (
-        fresh_ckpairs.join(ma, "ck_a")
-        .join(mb, "ck_b")
-        .select(F.least("ia", "ib").alias("id_a"), F.greatest("ia", "ib").alias("id_b"), "jaccard")
-    )
+        # candidate key pairs: a fresh key and any other key sharing one
+        # of its (band, band key) buckets
+        bucket = defaultdict(set)
+        for ck, sig in sig_of.items():
+            for b, k in enumerate(_band_keys(sig, bands)):
+                bucket[b, k].add(ck)
+        cand = {
+            (min(f, g), max(f, g))
+            for f in fresh
+            for b, k in enumerate(_band_keys(sig_of[f], bands))
+            for g in bucket[b, k]
+            if g != f
+        }
 
-    if old_ckpairs is not None:
-        # stored key pairs × new members of either endpoint; the partner
-        # endpoint expands over ALL its members (old ones included — those
-        # (new, old) pairs are exactly what re-banding would have found)
-        na = new_members.select(F.col("__ck").alias("ck_a"), F.col("__id").alias("ia"))
-        nb = new_members.select(F.col("__ck").alias("ck_b"), F.col("__id").alias("ib"))
-        inherited = (
-            old_ckpairs.join(na, "ck_a")
-            .join(mb, "ck_b")
-            .select("ia", "ib", "jaccard")
-            .unionByName(
-                old_ckpairs.join(ma, "ck_a").join(nb, "ck_b").select("ia", "ib", "jaccard")
-            )
-            .select(
-                F.least("ia", "ib").alias("id_a"),
-                F.greatest("ia", "ib").alias("id_b"),
-                "jaccard",
-            )
-            .distinct()
-        )
-        cross = cross_fresh.unionByName(inherited)
-    else:
-        cross = cross_fresh
+        # 4. one shingle set per candidate key outside the delta: any
+        # member's serves, all members share the token stream
+        need = {ck for pair in cand for ck in pair if ck not in sh_of}
+        if need:
+            ids = sorted(min(members[ck]) for ck in need)
+            fetched = minhash_base(p.full().where(F.col(id_col).isin(ids)), text_col, id_col)
+            for ck, sh in _rows(fetched, ("__ck", "__sh")):
+                sh_of[ck] = set(sh)
 
-    # ---- intra-key pairs: identical shingle sets, jaccard exactly 1 ----
-    nl = new_members.alias("nl")
-    ar = all_members.alias("ar")
-    intra = (
-        nl.join(
-            ar,
-            (F.col("nl.__ck") == F.col("ar.__ck")) & (F.col("nl.__id") != F.col("ar.__id")),
-        )
-        .select(
-            F.least(F.col("nl.__id"), F.col("ar.__id")).alias("id_a"),
-            F.greatest(F.col("nl.__id"), F.col("ar.__id")).alias("id_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-        .distinct()
-    )
-    if threshold > 1.0:
-        intra = intra.where(F.lit(False))
+        for a, b in sorted(cand):
+            inter = len(sh_of[a] & sh_of[b])
+            j = _jaccard(inter, len(sh_of[a]) + len(sh_of[b]) - inter)
+            if j >= threshold:
+                key_pairs.append((a, b, j))
 
-    pairs = cross.unionByName(intra).distinct().localCheckpoint(eager=True)
+    # member pairs with a new side: fresh key pairs over all members,
+    # stored key pairs over the new members of either endpoint, and the
+    # new members of each key with its other members
+    out = set()
 
-    # ---- commit: key pairs, then per-doc rows + cursor; pairs already safe ----
-    # materialized once: the signature aggregation (one md5 per shingle)
-    # otherwise re-runs for the row count AND again for the write
-    new_rows = new_members.join(new_sigs, "__ck").select(
-        F.col("__id").alias("doc_id"), F.col("__ck").alias("ck"), "sig"
-    ).localCheckpoint(eager=True)
-    # everything the commits and the caller read is checkpointed now
-    new_base.unpersist()
-    new_reps.unpersist()
-    fresh_sigs.unpersist()
+    def cross(left, right, j):
+        out.update((min(x, y), max(x, y), j) for x in left for y in right)
 
-    def land(uuid: str, df: DataFrame):
-        if incremental:
-            return lambda meta: update_dataset(
-                spark, df if df.count() else None, index_root, uuid, metadata=meta
-            )
-        return lambda meta: store_dataframe_as_dataset(spark, df, index_root, uuid, metadata=meta)
+    for a, b, j in key_pairs:
+        cross(members[a], members[b], j)
+    for a, b, j in stored:
+        cross(new.get(a, ()), members[b], j)
+        cross(members[a], new.get(b, ()), j)
+    if threshold <= 1.0:
+        for ck, ids in new.items():
+            out.update((min(x, y), max(x, y), 1.0) for x in ids for y in members[ck] if x != y)
 
-    p.commit({pairs_uuid: land(pairs_uuid, fresh_ckpairs), index_uuid: land(index_uuid, new_rows)})
+    id_type = delta.schema.field("doc_id").type
+    pairs = spark.createDataFrame(_table(
+        sorted(out), pa.schema([("id_a", id_type), ("id_b", id_type), ("jaccard", pa.float64())])
+    ))
+    fresh_ckpairs = _table(key_pairs, pa.schema([("ck_a", pa.string()), ("ck_b", pa.string()), ("jaccard", pa.float64())]))
+
+    def land(uuid: str, table: pa.Table):
+        df = spark.createDataFrame(table) if table.num_rows else None
+        return lambda meta: update_dataset(spark, df, index_root, uuid, metadata=meta)
+
+    p.commit({
+        pairs_uuid: land(pairs_uuid, fresh_ckpairs),
+        index_uuid: land(index_uuid, delta.select(["doc_id", "ck", "sig"])),
+    })
     return pairs
+
+
+def _table(rows: list[tuple], schema: pa.Schema) -> pa.Table:
+    cols = list(zip(*rows)) or [()] * len(schema)
+    return pa.Table.from_arrays([pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema)
+
+
+def _rows(df: DataFrame, cols) -> list[tuple]:
+    """``cols`` of ``df`` as driver tuples, in one ``toArrow()`` job."""
+    table = df.select(*cols).toArrow()
+    return list(zip(*(table.column(c).to_pylist() for c in cols)))
 
 
 __all__ = ["sync_minhash_index"]

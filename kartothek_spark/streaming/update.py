@@ -460,9 +460,9 @@ def stream_dedup_index(
             lambda df, stamp: store_dataframe_as_dataset(
                 spark, df, root, pairs_uuid, metadata=stamp
             ),
-            # count is driver-cheap here: sync_minhash_index returns an
-            # eagerly localCheckpoint-ed frame, so this reads materialized
-            # blocks rather than re-running the banding job
+            # count is cheap here: sync_minhash_index returns its pairs
+            # computed (the driver's rows after an incremental sync, a
+            # checkpoint after a build), so nothing re-runs the banding
             lambda df, stamp: update_dataset(
                 spark, df if df.count() else None, root, pairs_uuid, metadata=stamp
             ),

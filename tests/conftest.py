@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -21,3 +22,17 @@ def tmp_root(tmp_path):
 
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+def spark_jobs(spark, build):
+    """(result of ``build()``, ids of the Spark jobs it started), counted
+    with the status tracker under a job group of its own."""
+    sc = spark.sparkContext
+    before = sc.getLocalProperty("spark.jobGroup.id")
+    group = "count-" + uuid.uuid4().hex
+    sc.setJobGroup(group, "counted")
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", before)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))

@@ -153,3 +153,25 @@ def test_decimal_partition_key_predicates(spark, tmp_root):
     assert vs([[("d", "<=", Decimal("2"))], [("d", "==", Decimal("3.250"))]]) == [1, 2, 3, 4]
     m = DatasetManifest.load(tmp_root, "dec")
     assert len(m.query(predicates=[[("d", "==", Decimal("1.5"))]])) == 1
+
+
+def test_decimal_stats_column_is_never_used_to_skip(spark, tmp_root):
+    """``stats_columns`` naming a decimal column: pyarrow cannot decode the
+    statistics Spark writes for it, so the column gets no stats (and skips
+    no file) instead of failing the write."""
+    from decimal import Decimal
+
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [T.StructField("m", T.DecimalType(10, 2)), T.StructField("v", T.LongType())]
+    )
+    rows = [(Decimal(i) / 4, i) for i in range(40)]
+    store_dataframe_as_dataset(
+        spark, spark.createDataFrame(rows, schema).repartition(4), tmp_root, "decstats",
+        stats_columns=["m", "v"],
+    )
+    m = DatasetManifest.load(tmp_root, "decstats")
+    assert all("m" not in e.get("stats", {}) and "v" in e["stats"] for e in m.partitions.values())
+    got = read_table(spark, tmp_root, "decstats", predicates=[[("m", ">", Decimal("7.50"))]])
+    assert sorted(r.v for r in got.collect()) == list(range(31, 40))

@@ -10,7 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, spark_jobs
 
 
 def _plan(df) -> str:
@@ -97,13 +97,8 @@ def test_bucket_prune_runs_no_spark_job(spark, tmp_root):
     m = DatasetManifest.load(tmp_root, "lb")
 
     key = li.select("l_orderkey").first()[0]
-    sc = spark.sparkContext
-    sc.setJobGroup("bucket-prune-probe", "planning must be job-free")
-    try:
-        labels = dispatch_labels(spark, m, [[("l_orderkey", "==", key)]])
-    finally:
-        sc.setJobGroup(None, None)
-    assert sc.statusTracker().getJobIdsForGroup("bucket-prune-probe") == []
+    labels, jobs = spark_jobs(spark, lambda: dispatch_labels(spark, m, [[("l_orderkey", "==", key)]]))
+    assert jobs == []
     assert 0 < len(labels) < len(m.partitions)
     assert len({seg for l in labels for seg in l.split("/") if seg.startswith(BUCKET_COL)}) == 1
 

@@ -7,10 +7,10 @@ group."""
 
 from __future__ import annotations
 
-import uuid
-
 import pytest
 from pyspark.sql import Row
+
+from tests.conftest import spark_jobs
 
 from kartothek_spark.core import index as ktk_index
 from kartothek_spark.core.cube import Cube
@@ -43,33 +43,20 @@ def cube_root(spark, tmp_path_factory):
     return root
 
 
-def _jobs(spark, build):
-    """(result of ``build()``, ids of the Spark jobs it started)."""
-    sc = spark.sparkContext
-    before = sc.getLocalProperty("spark.jobGroup.id")
-    group = "plan-" + uuid.uuid4().hex
-    sc.setJobGroup(group, "planning only")
-    try:
-        out = build()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", before)
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_read_table_with_index_predicate_plans_without_jobs(spark, cube_root):
     uuid_ = CUBE.ktk_dataset_uuid("seed")
     preds = [[("i1", "in", [3, 50, 96])]]
-    df, jobs = _jobs(spark, lambda: read_table(spark, cube_root, uuid_, predicates=preds))
+    df, jobs = spark_jobs(spark, lambda: read_table(spark, cube_root, uuid_, predicates=preds))
     assert jobs == []
     # the tracker does see the action's jobs
-    rows, action_jobs = _jobs(spark, df.collect)
+    rows, action_jobs = spark_jobs(spark, df.collect)
     assert action_jobs
     assert sorted(r.x for r in rows) == [x for x in range(4 * PARTITIONS) if x % 97 in (3, 50, 96)]
 
 
 def test_query_cube_with_index_condition_plans_without_jobs(spark, cube_root):
     conds = [[("i1", "in", [3, 50])]]
-    df, jobs = _jobs(spark, lambda: query_cube(spark, CUBE, cube_root, conditions=conds))
+    df, jobs = spark_jobs(spark, lambda: query_cube(spark, CUBE, cube_root, conditions=conds))
     assert jobs == []
     rows = df.collect()
     assert sorted((r.x, r.w) for r in rows) == [
@@ -80,7 +67,7 @@ def test_query_cube_with_index_condition_plans_without_jobs(spark, cube_root):
 def test_read_dataset_dispatched_on_index_plans_without_jobs(spark, cube_root):
     uuid_ = CUBE.ktk_dataset_uuid("seed")
     preds = [[("i1", "in", [3, 50])]]
-    groups, jobs = _jobs(
+    groups, jobs = spark_jobs(
         spark, lambda: list(read_dataset_dispatched(spark, cube_root, uuid_, ["i1"], preds))
     )
     assert jobs == []
@@ -91,6 +78,29 @@ def test_read_dataset_dispatched_on_index_plans_without_jobs(spark, cube_root):
     for g, _conj, df in groups:
         want = [x for x in range(4 * PARTITIONS) if x % 97 == g["i1"] in (3, 50)]
         assert sorted(r.x for r in df.collect()) == want
+
+
+def test_read_dataset_dispatched_keeps_only_groups_the_predicate_admits(spark, cube_root):
+    """The surviving labels hold other ``i1`` values too; only the groups
+    whose value can satisfy the DNF are yielded, and their rows are the
+    rows of the predicated read."""
+    uuid_ = CUBE.ktk_dataset_uuid("seed")
+    preds = [[("i1", "in", [3, 50])]]
+    groups, jobs = spark_jobs(
+        spark, lambda: list(read_dataset_dispatched(spark, cube_root, uuid_, ["i1"], preds))
+    )
+    assert jobs == []
+    assert [g["i1"] for g, _conj, _df in groups] == [3, 50]
+    got = sorted(r.x for _g, _conj, df in groups for r in df.collect())
+    want = sorted(r.x for r in read_table(spark, cube_root, uuid_, predicates=preds).collect())
+    assert got == want == [x for x in range(4 * PARTITIONS) if x % 97 in (3, 50)]
+    # one group per admitted value of any conjunction; a range literal too
+    preds = [[("i1", "==", 3)], [("i1", ">=", 95), ("p", "<", 10)]]
+    groups = list(read_dataset_dispatched(spark, cube_root, uuid_, ["i1", "p"], preds))
+    keys = [(g["i1"], g["p"]) for g, _conj, _df in groups]
+    assert keys == sorted({(x % 97, x % PARTITIONS) for x in range(4 * PARTITIONS)
+                           if x % 97 == 3 or (x % 97 >= 95 and x % PARTITIONS < 10)})
+    assert all(df.count() == 1 for _g, _conj, df in groups)
 
 
 def test_index_update_in_append_starts_no_jobs(spark, tmp_path, monkeypatch):
@@ -104,7 +114,7 @@ def test_index_update_in_append_starts_no_jobs(spark, tmp_path, monkeypatch):
     update_index = ktk_index.update_index
 
     def counted(*args, **kwargs):
-        rel, jobs = _jobs(spark, lambda: update_index(*args, **kwargs))
+        rel, jobs = spark_jobs(spark, lambda: update_index(*args, **kwargs))
         seen.append(jobs)
         return rel
 
